@@ -830,7 +830,8 @@ def main() -> None:
     # r15 scale guard (r14 verdict ask #8, REPORT-ONLY): the r14
     # anti-scaling regressions (8 cores beating 32 on the heavy rows)
     # surfaced only at judging. Each gated run now writes its
-    # per-query mins to BENCH_BYCPU_c<cpus>.json; when a sibling file
+    # per-query mins to the gitignored
+    # .benchdata/BENCH_BYCPU_c<cpus>.json; when a sibling file
     # from a DIFFERENT core count exists at the same sf, the full
     # artifact carries per-query ratios (this_run / ref_run) plus the
     # ref file's age — purely informational, never gates anything.
@@ -842,7 +843,10 @@ def main() -> None:
             import glob as _glob
             import re as _re
 
-            here = os.path.dirname(os.path.abspath(__file__))
+            here = os.path.join(
+                os.path.dirname(os.path.abspath(__file__)), ".benchdata"
+            )
+            os.makedirs(here, exist_ok=True)
             my_path = os.path.join(here, f"BENCH_BYCPU_c{cpus_env}.json")
             with open(my_path, "w") as fh:
                 json.dump(

@@ -19,6 +19,19 @@ left-to-right into a single DataFrame plan (narrow steps fuse into
 one codegen stage; only the dedups introduce their documented
 shuffles). Unknown ops or parameters raise ``ConfigError`` at BUILD
 time, not mid-job — the factory.py validation discipline.
+
+The steps hold no stage logic of their own that the catalog
+flagships or the streaming corpus path also need: each such decision
+lives in one helper that all of them call —
+
+- ``text.words``: the lowercased ``[a-z]+`` word split;
+- ``dedup.split_tag``: the salted-hash train/val/test tag
+  (``leakage_split``, ``hash_split``);
+- ``text.bpe_encode_vocab`` / ``text.bpe_doc_tokens``: the BPE
+  vocabulary encode and per-doc token count (``bpe_token_count``,
+  ``bpe_train_token_count``);
+- ``sketch.bloom_window_gate``: the k-gram Bloom decontamination gate
+  (``decontaminate``).
 """
 
 from __future__ import annotations
@@ -86,6 +99,26 @@ def _step_token_count(df: DataFrame, text_col: str, out_col: str = "n_tokens") -
     return df.withColumn(out_col, tx.token_count(F.col(text_col)))
 
 
+def _with_bpe_token_count(
+    df: DataFrame,
+    text_col: str,
+    merges: list[tuple[str, str]],
+    rounds: int,
+    key_col: str,
+    out_col: str,
+) -> DataFrame:
+    """Attach each doc's BPE token count under ``merges``
+    (tx.bpe_doc_tokens); docs with no word reach 0, not null."""
+    per_doc = tx.bpe_doc_tokens(
+        df, merges, rounds, text_col, key_col, out_col, key_as="_k"
+    )
+    return (
+        df.join(per_doc, df[key_col] == per_doc["_k"], "left")
+        .drop("_k")
+        .withColumn(out_col, F.coalesce(out_col, F.lit(0).cast("long")))
+    )
+
+
 def _step_bpe_token_count(
     df: DataFrame,
     text_col: str,
@@ -93,45 +126,15 @@ def _step_bpe_token_count(
     rounds: int = 2,
     out_col: str = "n_bpe_tokens",
 ) -> DataFrame:
-    """Per-doc BPE sequence-length cost — the budget number packing
-    and pricing actually need (token_count's whitespace/regex proxies
-    under- or over-state it for merge-heavy text): each doc's words
-    join the GLOBAL encoded vocabulary (the encode fold runs once per
-    DISTINCT word — Heaps' law, the bpe_fertility shape — never per
-    occurrence), summed back per ``key_col``. Docs with no word reach
-    0, not null. Two bounded shuffles (word-keyed agg over the vocab,
-    doc-keyed sum); the fold chain itself is zero-shuffle narrow."""
-    words = df.select(
-        F.col(key_col).alias("_k"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w"),
-    )
-    per_doc_word = words.groupBy("_k", "w").agg(
-        F.count(F.lit(1)).alias("_n_w")
-    )
-    staged = per_doc_word.select("w").distinct().withColumn(
-        "_c0", F.split("w", "")
-    )
-    for r in range(1, rounds + 1):
-        staged = staged.withColumn(
-            f"_c{r}", tx.bpe_merge_pass(F.col(f"_c{r - 1}"), tx.BPE_MERGES)
-        )
-    enc = staged.select(
-        "w", F.size(F.col(f"_c{rounds}")).cast("long").alias("_n_tok")
-    )
-    per_doc = (
-        per_doc_word.join(enc, "w")
-        .groupBy("_k")
-        .agg(F.sum(F.col("_n_w") * F.col("_n_tok")).alias(out_col))
-    )
-    return (
-        df.join(per_doc, df[key_col] == per_doc["_k"], "left")
-        .drop("_k")
-        .withColumn(out_col, F.coalesce(out_col, F.lit(0).cast("long")))
+    """Per-doc BPE sequence-length cost under the static BPE_MERGES
+    table — the budget number packing and pricing actually need
+    (token_count's whitespace/regex proxies under- or over-state it
+    for merge-heavy text): each doc's words join the GLOBAL encoded
+    vocabulary (the encode fold runs once per DISTINCT word — Heaps'
+    law — never per occurrence), summed back per ``key_col``. Two
+    bounded shuffles; the fold chain itself is zero-shuffle narrow."""
+    return _with_bpe_token_count(
+        df, text_col, tx.BPE_MERGES, rounds, key_col, out_col
     )
 
 
@@ -297,15 +300,7 @@ def _step_decontaminate(
 
     bits = df.sparkSession.read.parquet(path).select("pos")
     if not df.isStreaming:
-        wh = dd.window_hashes(df, k, text_col, id_col).distinct()
-        hits = (
-            sk.bloom_suppress(
-                wh, bits, "window_hash", m=m, j=j, keep_hits=True
-            )
-            .select(id_col)
-            .distinct()
-        )
-        return df.join(hits, id_col, "left_anti")
+        return sk.bloom_window_gate(df, bits, m, j, k, text_col, id_col)
     # STREAMING path: the anti-join shape above is illegal on a
     # stream (left-anti with a stream-derived right side), so the
     # position frame folds into a BITMAP LITERAL instead — a bounded
@@ -374,16 +369,9 @@ def _step_leakage_split(
         threshold_milli / 1000.0,
     )
     cl = dd.dup_clusters(pairs).withColumnRenamed("cluster_id", "_cid")
-    gid = F.coalesce("_cid", id_col)
-    b = dd.h60(F.concat(F.lit("split:"), gid.cast("string"))) % 100
     return (
         df.join(cl, id_col, "left")
-        .withColumn(
-            out_col,
-            F.when(b < 80, F.lit("train"))
-            .when(b < 90, F.lit("val"))
-            .otherwise(F.lit("test")),
-        )
+        .withColumn(out_col, dd.split_tag(F.coalesce("_cid", id_col)))
         .drop("_cid")
     )
 
@@ -410,38 +398,7 @@ def _step_bpe_train_token_count(
         (r["lhs"], r["rhs"])
         for r in tx.bpe_train(train, text_col=text_col, n_merges=n_merges).collect()
     ]
-    words = df.select(
-        F.col(key_col).alias("_k"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w"),
-    )
-    per_doc_word = words.groupBy("_k", "w").agg(
-        F.count(F.lit(1)).alias("_n_w")
-    )
-    staged = per_doc_word.select("w").distinct().withColumn(
-        "_c0", F.split("w", "")
-    )
-    for r in range(1, rounds + 1):
-        staged = staged.withColumn(
-            f"_c{r}", tx.bpe_merge_pass(F.col(f"_c{r - 1}"), learned)
-        )
-    enc = staged.select(
-        "w", F.size(F.col(f"_c{rounds}")).cast("long").alias("_n_tok")
-    )
-    per_doc = (
-        per_doc_word.join(enc, "w")
-        .groupBy("_k")
-        .agg(F.sum(F.col("_n_w") * F.col("_n_tok")).alias(out_col))
-    )
-    return (
-        df.join(per_doc, df[key_col] == per_doc["_k"], "left")
-        .drop("_k")
-        .withColumn(out_col, F.coalesce(out_col, F.lit(0).cast("long")))
-    )
+    return _with_bpe_token_count(df, text_col, learned, rounds, key_col, out_col)
 
 
 def _step_exact_dedup_vs_store(
@@ -509,14 +466,22 @@ def _step_hash_split(
     assignable the moment a doc arrives with no corpus-wide state.
     Run it AFTER the store-probing dedups: a near-dup of history
     never reaches the tag (killed), so the pointwise tag cannot
-    straddle a known cluster."""
-    b = dd.h60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))) % 100
+    straddle a known cluster. ``train_pct``/``val_pct`` are checked
+    at build time (:func:`_check_hash_split`)."""
     return df.withColumn(
-        out_col,
-        F.when(b < train_pct, F.lit("train"))
-        .when(b < train_pct + val_pct, F.lit("val"))
-        .otherwise(F.lit("test")),
+        out_col, dd.split_tag(F.col(id_col), salt, train_pct, val_pct)
     )
+
+
+def _check_hash_split(train_pct: int = 80, val_pct: int = 10, **_) -> str | None:
+    """The build-time check of hash_split's percentages: an error
+    message, or None when they describe three (possibly empty) splits."""
+    for name, v in {"train_pct": train_pct, "val_pct": val_pct}.items():
+        if isinstance(v, bool) or not isinstance(v, (int, float)) or v < 0:
+            return f"{name} must be a non-negative number, got {v!r}"
+    if train_pct + val_pct > 100:
+        return f"train_pct + val_pct must be <= 100, got {train_pct + val_pct}"
+    return None
 
 
 STEPS: dict[str, Callable[..., DataFrame]] = {
@@ -579,6 +544,9 @@ class CorpusPipeline:
             missing = [r for r in required if r not in kw]
             if missing:
                 raise ConfigError(f"corpus step {i} ({op}): missing option(s) {missing}")
+            err = _check_hash_split(**kw) if op == "hash_split" else None
+            if err:
+                raise ConfigError(f"corpus step {i} ({op}): {err}")
             self._steps.append(
                 (op, (lambda df, _fn=fn, _kw=kw: _fn(df, text_col=self.text_col, **_kw)))
             )

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from logprep_spark.fields import field_type, get_field
 from logprep_spark.filters import ast
 from logprep_spark.filters.parser import parse_filter
+from logprep_spark.session import AppMemo
 
 _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FLOAT_TYPES = (T.FloatType, T.DoubleType, T.DecimalType)
@@ -41,10 +42,8 @@ _FLOAT_TYPES = (T.FloatType, T.DoubleType, T.DecimalType)
 #: identity or its data. A production SIEM compiles its rule corpus
 #: once per deploy; this memo is that posture (compiled CODE, not
 #: data or results — nothing here is keyed on an input path or row
-#: contents). Keyed on the Spark application id so a new JVM never
-#: sees another JVM's Column handles; bounded, cleared on overflow.
-_COMPILE_MEMO: dict = {}
-_COMPILE_MEMO_CAP = 8192
+#: contents).
+_COMPILE_MEMO = AppMemo(8192)
 
 
 def compile_filter(
@@ -56,23 +55,14 @@ def compile_filter(
     """Compile a filter string or AST into a boolean ``Column``."""
     schema = df_or_schema.schema if isinstance(df_or_schema, DataFrame) else df_or_schema
     if isinstance(filter_expr, str):
-        try:
-            from pyspark.sql import SparkSession
-
-            sess = SparkSession.getActiveSession()
-            app_id = sess.sparkContext.applicationId if sess else None
-        except Exception:
-            app_id = None
         rf = tuple(regex_fields) if isinstance(regex_fields, list) else regex_fields
         sf = tuple(sigma_fields) if isinstance(sigma_fields, list) else sigma_fields
-        key = (app_id, filter_expr, rf, sf, schema.json())
+        key = _COMPILE_MEMO.key(None, filter_expr, rf, sf, schema.json())
         hit = _COMPILE_MEMO.get(key)
         if hit is not None:
             return hit
         col = _compile(parse_filter(filter_expr, regex_fields, sigma_fields), schema)
-        if len(_COMPILE_MEMO) >= _COMPILE_MEMO_CAP:
-            _COMPILE_MEMO.clear()
-        _COMPILE_MEMO[key] = col
+        _COMPILE_MEMO.put(key, col)
         return col
     return _compile(filter_expr, schema)
 

@@ -57,6 +57,22 @@ def h60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def split_tag(
+    key: Column, salt: str = "split", train_pct: int = 80, val_pct: int = 10
+) -> Column:
+    """Deterministic train/val/test tag: ``h60(salt:key) % 100`` below
+    ``train_pct`` is train, below ``train_pct + val_pct`` val, the
+    rest test. Same doc (or cluster) lands in the same split on every
+    engine, run and partitioning — the randomSplit alternative every
+    split in the corpus pipeline uses."""
+    b = h60(F.concat(F.lit(salt + ":"), key.cast("string"))) % 100
+    return (
+        F.when(b < train_pct, F.lit("train"))
+        .when(b < train_pct + val_pct, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
 def shingles_of(toks: Column, k: int = 3) -> Column:
     """Distinct k-word shingles over an ALREADY-MATERIALIZED token
     array column. The two-step shape matters: higher-order-function
@@ -1645,18 +1661,10 @@ def incremental_atomic_split(
         F.coalesce("_m", F.col("gid0")).alias("fgid"),
     )
 
-    def tag(key):
-        b = h60(F.concat(F.lit("gsplit:"), key.cast("string"))) % 100
-        return (
-            F.when(b < 80, F.lit("train"))
-            .when(b < 90, F.lit("val"))
-            .otherwise(F.lit("test"))
-        )
-
     asn = (
         b_asn.unionByName(d_asn)
-        .withColumn("split", tag(F.col("fgid")))
-        .withColumn("naive_split", tag(F.col(id_col)))
+        .withColumn("split", split_tag(F.col("fgid"), "gsplit"))
+        .withColumn("naive_split", split_tag(F.col(id_col), "gsplit"))
     )
     return asn, pairs
 

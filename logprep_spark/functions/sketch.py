@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logprep_spark.functions.dedup import h60
+from logprep_spark.functions.dedup import h60, window_hashes
 
 #: h60 values are uniform in [0, 2^60)
 _H_MAX = float(1 << 60)
@@ -1083,6 +1083,43 @@ def bloom_suppress(
     out = out.withColumn("_hit", hit)
     kept = out.filter(F.col("_hit") if keep_hits else ~F.col("_hit"))
     return kept.drop("_hit", *[f"_bp{i}" for i in range(j)])
+
+
+def bloom_window_hits(
+    wh: DataFrame, bits: DataFrame, m: int, j: int, id_col: str = "doc_id"
+) -> DataFrame:
+    """Docs with at least one k-gram window hitting the Bloom filter
+    ``bits`` in all ``j`` positions — the decontamination verdict over
+    a DISTINCT (id, window_hash) frame (dedup.window_hashes). Callers
+    that reuse their window frame for another consumer (the exact-
+    overlap witness) pass it here directly. Returns distinct (id_col)."""
+    return (
+        bloom_suppress(wh, bits, "window_hash", m=m, j=j, keep_hits=True)
+        .select(id_col)
+        .distinct()
+    )
+
+
+def bloom_window_gate(
+    df: DataFrame,
+    bits: DataFrame,
+    m: int,
+    j: int,
+    k: int = 13,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Benchmark DECONTAMINATION against a stored Bloom filter of the
+    eval set's k-gram window hashes: drop every doc of ``df`` with a
+    window hitting all ``j`` positions (:func:`bloom_window_hits`).
+    No false negatives, so an exact-overlap doc never passes; the
+    collateral is fp-bounded by the filter sizing. The filter
+    broadcasts, the corpus is never shuffled. The one gate the corpus
+    ``decontaminate`` step, the incremental pretrain flagship and the
+    streaming corpus path share."""
+    wh = window_hashes(df, k, text_col, id_col).distinct()
+    hits = bloom_window_hits(wh, bits, m, j, id_col)
+    return df.join(hits, id_col, "left_anti")
 
 
 def sq_sketch_slices(

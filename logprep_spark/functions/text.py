@@ -35,6 +35,14 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda t: t != "")
 
 
+def words(col: Column) -> Column:
+    """Lowercased ``[a-z]+`` runs with empties removed — the word split
+    every subword tokenizer (BPE, unigram) and word-level model here
+    trains and encodes on; the DuckDB replicas spell it
+    ``list_filter(string_split_regex(lower(text), '[^a-z]+'), ...)``."""
+    return F.filter(F.split(F.lower(col), "[^a-z]+"), lambda w: w != "")
+
+
 def text_rows(df: DataFrame, text_col: str) -> DataFrame:
     """Raw-column companion predicate for token-derived filters — the
     pushdown playbook (see sketch_theta_overlap's raw-ts range): any
@@ -1035,34 +1043,78 @@ def bpe_encode_words(
     only want the lazy plan — explain/lint tooling, streaming
     composition — pass ``checkpoint=False`` and pin (or not) at
     their own consumption site (the ADVICE-r10 opt-out); catalog
-    batch paths keep the default. The corpus-pipeline streaming
-    steps build their own inline chain and are untouched.
+    batch paths keep the default.
     Returns (w, n_w, tokens, converged)."""
     if merges is None:
         merges = BPE_MERGES
-    words = df.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w")
+    vocab = (
+        df.select(F.explode(words(F.col(text_col))).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n_w"))
     )
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("n_w"))
+    out = bpe_encode_vocab(vocab, merges, rounds)
+    return out.localCheckpoint(eager=True) if checkpoint else out
+
+
+def bpe_encode_vocab(
+    vocab: DataFrame, merges: list[tuple[str, str]], rounds: int
+) -> DataFrame:
+    """The BPE encode core every encoder here shares: each row's word
+    ``w`` splits into characters and runs ``rounds`` rank-order merge
+    rounds (:func:`bpe_merge_pass`) as staged projections — plan
+    literals, zero shuffle. Callers hand in a DISTINCT-word frame so
+    the fold runs once per vocabulary entry, never per occurrence.
+    Returns ``vocab``'s columns plus ``tokens`` (the encoded symbol
+    array) and ``converged`` (round ``rounds`` == round
+    ``rounds - 1``)."""
     staged = vocab.withColumn("_c0", F.split("w", ""))
     for r in range(1, rounds + 1):
         staged = staged.withColumn(
             f"_c{r}", bpe_merge_pass(F.col(f"_c{r - 1}"), merges)
         )
-    out = staged.select(
-        "w",
-        "n_w",
+    return staged.select(
+        *vocab.columns,
         F.col(f"_c{rounds}").alias("tokens"),
         (F.col(f"_c{rounds}") == F.col(f"_c{rounds - 1}")).alias(
             "converged"
         ),
     )
-    return out.localCheckpoint(eager=True) if checkpoint else out
+
+
+def bpe_doc_tokens(
+    df: DataFrame,
+    merges: list[tuple[str, str]],
+    rounds: int,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+    out_col: str = "n_bpe_tokens",
+    key_as: str | None = None,
+) -> DataFrame:
+    """Per-doc BPE sequence length — the budget number packing and
+    pricing need: (doc, word) occurrence counts join the encoded
+    DISTINCT vocabulary (:func:`bpe_encode_vocab`) and sum back per
+    ``key_col``. Two bounded shuffles (the (doc, word) agg and the
+    doc-keyed sum); raw text is never shuffled. Docs without a word
+    have no row. Returns (key, out_col), the key renamed to
+    ``key_as`` when given (a caller joining back onto ``df`` needs a
+    name ``df`` does not carry)."""
+    key = key_as or key_col
+    pdw = (
+        df.select(
+            F.col(key_col).alias(key_as) if key_as else F.col(key_col),
+            F.explode(words(F.col(text_col))).alias("w"),
+        )
+        .groupBy(key, "w")
+        .agg(F.count(F.lit(1)).alias("_n_w"))
+    )
+    enc = bpe_encode_vocab(pdw.select("w").distinct(), merges, rounds).select(
+        "w", F.size("tokens").cast("long").alias("_n_tok")
+    )
+    return (
+        pdw.join(enc, "w")
+        .groupBy(key)
+        .agg(F.sum(F.col("_n_w") * F.col("_n_tok")).alias(out_col))
+    )
 
 
 def bpe_token_counts(
@@ -1126,16 +1178,9 @@ def bpe_train(
     n_merges vocab-sized rounds. Returns the learned table:
     (rank, lhs, rhs, pair_count). Stops early (fewer rows) if no
     pair remains."""
-    words = df.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w")
-    )
     vocab = (
-        words.groupBy("w")
+        df.select(F.explode(words(F.col(text_col))).alias("w"))
+        .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
         .withColumn("t", F.split("w", ""))
         .localCheckpoint()
@@ -1196,30 +1241,18 @@ def bpe_fertility(
     chars_per_token_milli, converged)."""
     if merges is None:
         merges = BPE_MERGES
-    words = df.select(
-        F.col(domain_col),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w"),
-    )
-    counts = words.groupBy(domain_col, "w").agg(
-        F.count(F.lit(1)).alias("n_w")
-    )
-    staged = counts.select("w").distinct().withColumn(
-        "_c0", F.split("w", "")
-    )
-    for r in range(1, rounds + 1):
-        staged = staged.withColumn(
-            f"_c{r}", bpe_merge_pass(F.col(f"_c{r - 1}"), merges)
+    counts = (
+        df.select(
+            F.col(domain_col), F.explode(words(F.col(text_col))).alias("w")
         )
-    enc = staged.select(
+        .groupBy(domain_col, "w")
+        .agg(F.count(F.lit(1)).alias("n_w"))
+    )
+    enc = bpe_encode_vocab(counts.select("w").distinct(), merges, rounds).select(
         "w",
-        F.size(F.col(f"_c{rounds}")).cast("long").alias("_n_tok"),
+        F.size("tokens").cast("long").alias("_n_tok"),
         F.length("w").cast("long").alias("_n_chars"),
-        (F.col(f"_c{rounds}") == F.col(f"_c{rounds - 1}")).alias("_conv"),
+        F.col("converged").alias("_conv"),
     )
     joined = counts.join(enc, "w")
     return joined.groupBy(domain_col).agg(
@@ -1955,6 +1988,18 @@ UNIGRAM_MAX_PIECE = 4
 UNIGRAM_TOP_MULTI = 200
 
 
+def _unigram_words(df: DataFrame, text_col: str, max_word: int) -> DataFrame:
+    """Distinct corpus words of length <= ``max_word`` with their
+    occurrence counts — the unigram tokenizer's training/inference
+    vocabulary. Returns (w, n_w)."""
+    return (
+        df.select(F.explode(words(F.col(text_col))).alias("w"))
+        .filter(F.length("w") <= max_word)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_w"))
+    )
+
+
 def unigram_vocab(
     df: DataFrame,
     text_col: str = "text",
@@ -1976,20 +2021,8 @@ def unigram_vocab(
     distinct vocabulary first (Heaps' law), the substring explode is
     ≤ max_word·max_piece per distinct word, and the piece agg
     map-side combines. Returns (piece, cnt, cost_micro)."""
-    words = (
-        df.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                    lambda w: w != "",
-                )
-            ).alias("w")
-        )
-        .filter(F.length("w") <= max_word)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_w"))
-    )
-    subs = words.select(
+    vocab_w = _unigram_words(df, text_col, max_word)
+    subs = vocab_w.select(
         "n_w",
         F.explode(
             F.expr(
@@ -2045,23 +2078,11 @@ def unigram_segment_frame(
     excluded by the vocab contract (counted by the catalog row's
     witness). Returns (w, n_w, pieces array<string> in reverse
     order, n_pieces, cost_micro)."""
-    words = (
-        df.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                    lambda w: w != "",
-                )
-            ).alias("w")
-        )
-        .filter(F.length("w") <= max_word)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_w"))
-    )
+    vocab_w = _unigram_words(df, text_col, max_word)
     if vocab is None:
         vocab = unigram_vocab(df, text_col, top_multi, max_piece, max_word)
     cand = (
-        words.select(
+        vocab_w.select(
             "w",
             F.explode(
                 F.expr(
@@ -2082,7 +2103,7 @@ def unigram_segment_frame(
             F.collect_list(F.struct("e", "l", F.col("cost_micro").alias("c")))
         ).alias("cands")
     )
-    staged = words.join(cands, "w").withColumn(
+    staged = vocab_w.join(cands, "w").withColumn(
         "b", F.expr("array(CAST(0 AS BIGINT))")
     )
     # DP: 16 staged projections, one per position

@@ -62,6 +62,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logprep_spark import fields as fld
+from logprep_spark.session import AppMemo
 
 #: staged verdict-array column name
 COND_COL = "__rule_conds__"
@@ -75,34 +76,22 @@ COND_COL = "__rule_conds__"
 #: The built Column depends only on (rule corpus, input schema),
 #: never on the DataFrame identity or its data — compiled CODE, not
 #: data or results; nothing is keyed on an input path or row
-#: contents. Keyed on the Spark application id so a new JVM never
-#: sees another JVM's Column handles; bounded, cleared on overflow.
-_EXPR_MEMO: dict = {}
-_EXPR_MEMO_CAP = 1024
+#: contents.
+_EXPR_MEMO = AppMemo(1024)
 
 
 def _expr_memo_key(tag: str, rules, df: DataFrame):
     """Memo key for a bulk dispatch expression: application id +
-    ordered rule-corpus fingerprint + input schema. Returns ``None``
-    (no memoization) when no application id is reachable. A fingerprint
+    ordered rule-corpus fingerprint + input schema. ``None`` (no
+    memoization) when no application id is reachable. A fingerprint
     collision would need two UNEQUAL configs with equal ``repr`` —
     impossible for the plain str/int/list dicts rules carry; objects
     with identity reprs only cause harmless misses."""
-    try:
-        app_id = df.sparkSession.sparkContext.applicationId
-    except Exception:
-        return None
     fp = tuple(
         (r.filter, repr(r.config), repr(r.regex_fields), repr(r.sigma_fields))
         for r in rules
     )
-    return (app_id, tag, fp, df.schema.json())
-
-
-def _expr_memo_put(key, col: Column) -> None:
-    if len(_EXPR_MEMO) >= _EXPR_MEMO_CAP:
-        _EXPR_MEMO.clear()
-    _EXPR_MEMO[key] = col
+    return _EXPR_MEMO.key(df.sparkSession, tag, fp, df.schema.json())
 
 
 def _plan_hoist(rules, df: DataFrame):
@@ -330,7 +319,7 @@ def labeler_bulk(labeler, df: DataFrame) -> DataFrame:
     # corpus skip the py4j expression build (guide §4.5 on the driver;
     # measured ~3.4 s per construction at 500 rules)
     memo_key = _expr_memo_key("labeler_bulk", labeler.rules, df)
-    hit = _EXPR_MEMO.get(memo_key) if memo_key is not None else None
+    hit = _EXPR_MEMO.get(memo_key)
     if hit is not None:
         return df.withColumn("label", hit)
     # conditions compiled DIRECTLY against the input frame — the
@@ -513,8 +502,7 @@ def labeler_bulk(labeler, df: DataFrame) -> DataFrame:
             any_add,
             F.struct(*[v.alias(cat) for cat, v in values.items()]),
         )
-    if memo_key is not None:
-        _expr_memo_put(memo_key, label_col)
+    _EXPR_MEMO.put(memo_key, label_col)
     return staged.withColumn("label", label_col)
 
 
@@ -553,7 +541,7 @@ def pre_detector_alerts(
     # schema) — memoized like labeler_bulk's write (guide §4.5): the
     # N-way concat_ws build is the construction-time py4j hot spot
     memo_key = _expr_memo_key("pre_detector_ids", rules, df)
-    idstr = _EXPR_MEMO.get(memo_key) if memo_key is not None else None
+    idstr = _EXPR_MEMO.get(memo_key)
     if idstr is None:
         # hoisted CASE dispatch when the corpus shares an equality
         # field (see _plan_hoist) — per row only the matching group's
@@ -575,8 +563,7 @@ def pre_detector_alerts(
                     for i in range(len(rules))
                 ],
             )
-        if memo_key is not None:
-            _expr_memo_put(memo_key, idstr)
+        _EXPR_MEMO.put(memo_key, idstr)
     exploded = (
         df.withColumn(
             "_ris", F.explode(F.split(F.nullif(idstr, F.lit("")), "\x00"))

@@ -53,19 +53,22 @@ from logprep_spark.operators import (
     Timestamper,
 )
 from logprep_spark.plans import analytics as an
-from logprep_spark.session import load_tables
+from logprep_spark.session import AppMemo, load_tables
 
 _QUERIES: dict = {}
 _ORACLES: dict[str, str] = {}
 
-_TABLE_CACHE: dict[tuple[int, str], dict] = {}
+#: per-application table frames, one entry per sf_dir
+_TABLE_CACHE = AppMemo(16)
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict:
-    key = (id(spark), sf_dir)
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = load_tables(spark, sf_dir)
-    return _TABLE_CACHE[key]
+    key = _TABLE_CACHE.key(spark, sf_dir)
+    frames = _TABLE_CACHE.get(key)
+    if frames is None:
+        frames = load_tables(spark, sf_dir)
+        _TABLE_CACHE.put(key, frames)
+    return frames
 
 
 def _sketch_store_path(sf_dir: str, name: str) -> str:
@@ -631,12 +634,7 @@ def split_train_val_test(spark, sf_dir):
     doc lands in the same split on every engine, every run, any
     partitioning). Pure narrow map + one tiny agg."""
     docs = tables(spark, sf_dir)["documents"]
-    bucket = dd.h60(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
-    split = (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = dd.split_tag(F.col("doc_id"))
     return docs.select(split.alias("split")).groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -4099,19 +4097,11 @@ def split_leakage_free(spark, sf_dir):
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    def tag(key: Column) -> Column:
-        b = dd.h60(F.concat(F.lit("split:"), key.cast("string"))) % 100
-        return (
-            F.when(b < 80, F.lit("train"))
-            .when(b < 90, F.lit("val"))
-            .otherwise(F.lit("test"))
-        )
-
     asn = g.select(
         "doc_id",
         "_clustered",
-        tag(F.col("_gid")).alias("split"),
-        tag(F.col("doc_id")).alias("_naive"),
+        dd.split_tag(F.col("_gid")).alias("split"),
+        dd.split_tag(F.col("doc_id")).alias("_naive"),
     )
     a = asn.select(
         F.col("doc_id").alias("id_a"),
@@ -6193,41 +6183,12 @@ def pipeline_pretrain_v3(spark, sf_dir):
     gated = tx.gopher_filter(corpus, min_stop_hits=1).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # guide §2.6 job overlap: the bench-side window-hash chain is the
-    # ONE subtree independent of the minhash/cluster/BPE eager chain
-    # (everything else feeds bpe_train through hits -> final_docs), so
-    # its persist materializes on a driver thread WHILE the main
-    # thread runs the pairs/g checkpoints — the cluster's idle tail
-    # during those jobs absorbs the bench tokenize+hash pass instead
-    # of the final execution paying it. Same frames, same plan, same
-    # oracle hash; on warm bench iterations the cached persist makes
-    # the thread a no-op.
     bench_wh = (
         dd.window_hashes(bench, 13)
         .select("window_hash")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    import threading
-
-    from pyspark import inheritable_thread_target
-
-    _bg_errs: list[Exception] = []
-
-    def _materialize_bench_wh():
-        try:
-            spark.sparkContext.setJobDescription(
-                "pretrain_v3: bench window hashes (overlapped)"
-            )
-            bench_wh.write.format("noop").mode("overwrite").save()
-        except Exception as e:  # re-raised after join
-            _bg_errs.append(e)
-
-    _bg = threading.Thread(
-        target=inheritable_thread_target(_materialize_bench_wh),
-        daemon=True,
-    )
-    _bg.start()
     # persist, not localCheckpoint (r14): the verified-pair frame's
     # lineage is parquet-rooted and deterministic (gated persist →
     # minhash pipeline), so warm re-constructions share one
@@ -6267,13 +6228,7 @@ def pipeline_pretrain_v3(spark, sf_dir):
     rep_wh = dd.window_hashes(rep_docs, 13).distinct().persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    hits = (
-        sk.bloom_suppress(
-            rep_wh, bits, "window_hash", m=m, j=j, keep_hits=True
-        )
-        .select("doc_id")
-        .distinct()
-    )
+    hits = sk.bloom_window_hits(rep_wh, bits, m, j)
     # exact-overlap witness from the SAME window frames the Bloom
     # path already built (contamination_flags would re-tokenize and
     # re-window BOTH sides — a second full text pass; measured ~0.7 s
@@ -6288,19 +6243,11 @@ def pipeline_pretrain_v3(spark, sf_dir):
         StorageLevel.MEMORY_AND_DISK
     )
 
-    def tag(key: Column) -> Column:
-        b = dd.h60(F.concat(F.lit("split:"), key.cast("string"))) % 100
-        return (
-            F.when(b < 80, F.lit("train"))
-            .when(b < 90, F.lit("val"))
-            .otherwise(F.lit("test"))
-        )
-
     asn = g.select(
         "doc_id",
         "_is_rep",
-        tag(F.col("_gid")).alias("split"),
-        tag(F.col("doc_id")).alias("_naive"),
+        dd.split_tag(F.col("_gid")).alias("split"),
+        dd.split_tag(F.col("doc_id")).alias("_naive"),
     )
     a = asn.select(
         F.col("doc_id").alias("id_a"),
@@ -6330,41 +6277,10 @@ def pipeline_pretrain_v3(spark, sf_dir):
     )
     # the learned merge table is a MODEL: <= 6 rows fetched to the
     # driver and baked into the encode folds as plan literals (the
-    # Lloyd-centroid / text_bpe_pipeline precedent). bpe_train's first
-    # job consumes bits -> bench_wh, so the overlap thread must be
-    # done (and its error surfaced) before training starts.
-    _bg.join()
-    if _bg_errs:
-        raise _bg_errs[0]
+    # Lloyd-centroid / text_bpe_pipeline precedent)
     learned_rows = tx.bpe_train(train_docs, n_merges=6).collect()
     learned = [(r["lhs"], r["rhs"]) for r in learned_rows]
-    words = final_docs.select(
-        "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w"),
-    )
-    pdw = words.groupBy("doc_id", "w").agg(
-        F.count(F.lit(1)).alias("_n_w")
-    )
-    staged = pdw.select("w").distinct().withColumn(
-        "_c0", F.split("w", "")
-    )
-    for r in range(1, 3):
-        staged = staged.withColumn(
-            f"_c{r}", tx.bpe_merge_pass(F.col(f"_c{r - 1}"), learned)
-        )
-    enc = staged.select(
-        "w", F.size("_c2").cast("long").alias("_n_tok")
-    )
-    perdoc = (
-        pdw.join(enc, "w")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("_n_w") * F.col("_n_tok")).alias("_n_bpe"))
-    )
+    perdoc = tx.bpe_doc_tokens(final_docs, learned, 2, out_col="_n_bpe")
     stat = (
         asn.join(hits.withColumn("_sup", F.lit(1)), "doc_id", "left")
         .join(exact.withColumn("_ex", F.lit(1)), "doc_id", "left")
@@ -15037,12 +14953,7 @@ def shard_balance_tokens(spark, sf_dir):
     # and the naive branches read the pinned narrow frame.
     toks = docs.select(
         "doc_id",
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).cast("long").alias("n_tokens"),
+        F.size(tx.words(F.col("text"))).cast("long").alias("n_tokens"),
     )
     ranked, _n = with_global_rank(
         toks, [F.col("n_tokens").desc(), F.col("doc_id")], rank_col="_rk"
@@ -15147,12 +15058,7 @@ def curriculum_order(spark, sf_dir):
         docs.select(
             "doc_id",
             "n_chars",
-            F.size(
-                F.filter(
-                    F.split(F.lower(F.col("text")), "[^a-z]+"),
-                    lambda w: w != "",
-                )
-            ).cast("long").alias("n_words"),
+            F.size(tx.words(F.col("text"))).cast("long").alias("n_words"),
         )
         # n_chars > 0 is the PUSHABLE raw-column companion of the
         # computed n_words > 0 predicate (a doc with a word has a
@@ -16686,12 +16592,7 @@ def ml_naive_bayes(spark, sf_dir):
             % 10
             < 8
         ).alias("is_train"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z]+"),
-                lambda w: w != "",
-            )
-        ).alias("w"),
+        F.explode(tx.words(F.col("text"))).alias("w"),
     )
     # lint note (unpushed-filters, IRREDUCIBLE): is_train is uniform
     # md5-hash split membership — independent of every raw column's
@@ -17907,34 +17808,10 @@ def pipeline_pretrain_incremental(spark, sf_dir):
         StorageLevel.MEMORY_AND_DISK
     )
 
-    def _bloom_gate(dfr, bits):
-        hit = (
-            sk.bloom_suppress(
-                dd.window_hashes(dfr, 13).distinct(),
-                bits,
-                "window_hash",
-                m=m,
-                j=j,
-                keep_hits=True,
-            )
-            .select("doc_id")
-            .distinct()
-        )
-        return dfr.join(hit, "doc_id", "left_anti")
-
     def _per_split(dfr, n_col, tok_col):
-        tag = dd.h60(
-            F.concat(F.lit("isplit:"), F.col("doc_id").cast("string"))
-        ) % 100
         return (
             ntok_all.join(dfr.select("doc_id"), "doc_id", "left_semi")
-            .select(
-                F.when(tag < 80, "train")
-                .when(tag < 90, "val")
-                .otherwise("test")
-                .alias("split"),
-                "_t",
-            )
+            .select(dd.split_tag(F.col("doc_id"), "isplit").alias("split"), "_t")
             .groupBy("split")
             .agg(
                 F.count(F.lit(1)).cast("long").alias(n_col),
@@ -17955,7 +17832,7 @@ def pipeline_pretrain_incremental(spark, sf_dir):
     bits = sk.bloom_bits(bench_wh, "window_hash", m=m, j=j).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    base_final = _bloom_gate(base_near, bits)
+    base_final = sk.bloom_window_gate(base_near, bits, m, j)
 
     # --- DELTA incremental pass (probes the stores) -------------------
     hist_near = (
@@ -17967,8 +17844,8 @@ def pipeline_pretrain_incremental(spark, sf_dir):
     delta_kill = hist_near.unionByName(
         _near_kill(dd.minhash_dedup(delta_exact, threshold=0.7))
     ).distinct()
-    delta_final = _bloom_gate(
-        delta_exact.join(delta_kill, "doc_id", "left_anti"), bits
+    delta_final = sk.bloom_window_gate(
+        delta_exact.join(delta_kill, "doc_id", "left_anti"), bits, m, j
     )
 
     # incremental-path witnesses: work done BY the stores. The md5
@@ -17997,7 +17874,7 @@ def pipeline_pretrain_incremental(spark, sf_dir):
         "doc_id",
         "left_anti",
     )
-    re_final = _bloom_gate(re_near, bits)
+    re_final = sk.bloom_window_gate(re_near, bits, m, j)
 
     spine = spark.createDataFrame(
         [("train",), ("val",), ("test",)], "split string"
@@ -18945,14 +18822,7 @@ def text_unigram_tokenize(spark, sf_dir):
     )
     vsize = vocab.agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
     skipped = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), "[^a-z]+"),
-                    lambda w: w != "",
-                )
-            ).alias("w")
-        )
+        docs.select(F.explode(tx.words(F.col("text"))).alias("w"))
         .filter(F.length("w") > tx.UNIGRAM_MAX_WORD)
         .agg(
             F.count_distinct("w").cast("long").alias("n_words_skipped")

@@ -72,16 +72,53 @@ def get_spark(app_name: str = "logprep-spark", master: str | None = None) -> Spa
     return spark
 
 
-#: fan_out partition-probe memo (r15, the dispatch/_EXPR_MEMO
-#: precedent): ``df.rdd.getNumPartitions()`` converts the FULL plan to
-#: an RDD — ~0.3 s of driver latency on a deep frame, re-paid per plan
-#: construction (pipeline_pretrain_incremental paid it 5x per build).
-#: The partition count of a logical plan is session-stable metadata
-#: (CODE-derived, never data or results), so memoize it keyed on
-#: (applicationId, analyzed-plan semanticHash). A hash collision could
-#: only skip/add a repartition — a performance nuance, never a result
-#: change. Bounded, cleared on overflow.
-_FANOUT_MEMO: dict = {}
+class AppMemo:
+    """Bounded memo of driver-side artifacts scoped to ONE Spark
+    application — compiled Columns, partition probes, table frames:
+    things that depend on code and schema, never on row contents.
+    Every key carries the application id, so a restarted application
+    never sees the previous JVM's handles, and the memo is cleared
+    whole once it holds ``cap`` entries, so it cannot grow without
+    bound. A None key is never stored and never hits."""
+
+    def __init__(self, cap: int):
+        self.cap = cap
+        self._entries: dict = {}
+
+    @staticmethod
+    def key(spark: SparkSession | None, *parts):
+        """``(application id, *parts)`` for ``spark``'s application
+        (the active SparkContext's when ``spark`` is None), or None
+        when no application id is reachable."""
+        from pyspark import SparkContext
+
+        try:
+            sc = spark.sparkContext if spark else SparkContext._active_spark_context
+            return (sc.applicationId, *parts)
+        except Exception:
+            return None
+
+    def get(self, key):
+        return None if key is None else self._entries.get(key)
+
+    def put(self, key, value) -> None:
+        if key is None:
+            return
+        if len(self._entries) >= self.cap:
+            self._entries.clear()
+        self._entries[key] = value
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+#: fan_out partition-probe memo: ``df.rdd.getNumPartitions()``
+#: converts the FULL plan to an RDD — ~0.3 s of driver latency on a
+#: deep frame, re-paid per plan construction. The partition count of
+#: a logical plan is session-stable metadata, so it is memoized per
+#: analyzed-plan semanticHash. A hash collision could only skip/add a
+#: repartition — a performance nuance, never a result change.
+_FANOUT_MEMO = AppMemo(4096)
 
 
 def fan_out(df, factor: float = 1.0):
@@ -105,22 +142,18 @@ def fan_out(df, factor: float = 1.0):
     # the corpus — executor cost proportional to data size, the wrong
     # trade at any scale. r15: the probe result is memoized per
     # (appId, plan semanticHash) — see _FANOUT_MEMO above.
-    key = None
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
+        key = _FANOUT_MEMO.key(
+            df.sparkSession,
             df._jdf.queryExecution().analyzed().semanticHash(),
             target,
         )
     except Exception:
-        pass
-    n = _FANOUT_MEMO.get(key) if key is not None else None
+        key = None
+    n = _FANOUT_MEMO.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(_FANOUT_MEMO) >= 4096:
-                _FANOUT_MEMO.clear()
-            _FANOUT_MEMO[key] = n
+        _FANOUT_MEMO.put(key, n)
     if n < target:
         return df.repartition(target)
     return df

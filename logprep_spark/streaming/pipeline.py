@@ -190,15 +190,15 @@ class IncrementalCorpusStream:
 
         from logprep_spark.functions.dedup import (
             dup_clusters,
-            h60,
             incremental_dedup_vs_store,
             minhash_bands,
             minhash_dedup,
             near_dup_vs_band_store,
             shingle_arrays,
+            split_tag,
             tokens,
-            window_hashes,
         )
+        from logprep_spark.functions.sketch import bloom_window_gate
         from logprep_spark.functions.text import gopher_filter
         from logprep_spark.session import fan_out
 
@@ -265,14 +265,6 @@ class IncrementalCorpusStream:
             )
         ).localCheckpoint(eager=True)
 
-        def tag(key):
-            b = h60(F.concat(F.lit("gsplit:"), key.cast("string"))) % 100
-            return (
-                F.when(b < 80, F.lit("train"))
-                .when(b < 90, F.lit("val"))
-                .otherwise(F.lit("test"))
-            )
-
         asn = exact.select("doc_id").join(
             merged.withColumnRenamed("cluster_id", "_m"), "doc_id", "left"
         ).select(
@@ -283,24 +275,10 @@ class IncrementalCorpusStream:
             hist_kill.unionByName(batch_kill).distinct(), "doc_id", "left_anti"
         )
         if self.bits is not None:
-            from logprep_spark.functions.sketch import bloom_suppress
-
-            hit = (
-                bloom_suppress(
-                    window_hashes(survivors, 13).distinct(),
-                    self.bits,
-                    "window_hash",
-                    m=self.m,
-                    j=self.j,
-                    keep_hits=True,
-                )
-                .select("doc_id")
-                .distinct()
-            )
-            survivors = survivors.join(hit, "doc_id", "left_anti")
+            survivors = bloom_window_gate(survivors, self.bits, self.m, self.j)
         self.out.write_batch(
             survivors.join(asn, "doc_id").select(
-                "doc_id", "text", tag(F.col("gid")).alias("split")
+                "doc_id", "text", split_tag(F.col("gid"), "gsplit").alias("split")
             ),
             batch_id,
         )

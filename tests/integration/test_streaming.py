@@ -1884,6 +1884,55 @@ def test_incremental_corpus_stream_restart_parity(spark, tmp_path):
     assert stream.shingle_store.committed_batches() == second
 
 
+def test_incremental_corpus_stream_bloom_gate(spark, tmp_path):
+    """With ``bloom_bits`` set, a micro-batch passes the same 13-gram
+    Bloom decontamination gate as the batch pipelines: a doc sharing
+    a window with the benchmark is never committed, a clean doc is,
+    and the committed set equals the batch gate's survivors."""
+    from pyspark.sql import functions as F
+
+    from logprep_spark.functions.dedup import window_hashes
+    from logprep_spark.functions.sketch import bloom_bits, bloom_window_gate
+    from logprep_spark.streaming import IncrementalCorpusStream
+
+    def text(seed, n=58):
+        return " ".join([f"{seed}w{i}" for i in range(n)] + ["the", "and"])
+
+    bench = spark.createDataFrame([(1, text("delta"))], "doc_id long, text string")
+    bits = bloom_bits(
+        window_hashes(bench, 13).select("window_hash").distinct(),
+        "window_hash", m=524288, j=3,
+    )
+    # shares 20 leading tokens (8 13-gram windows) with the benchmark;
+    # "the" keeps it past the Gopher stop-word gate
+    leaked = " ".join(
+        text("delta").split()[:20] + text("kappa").split()[:40] + ["the"]
+    )
+    batch = spark.createDataFrame(
+        [(11, text("alpha")), (12, leaked), (13, text("omega"))],
+        "doc_id long, text string",
+    )
+    stream = IncrementalCorpusStream(
+        store_dir=str(tmp_path / "stores"),
+        out_dir=str(tmp_path / "sink"),
+        bloom_bits=bits,
+    )
+    stream.process_batch(batch, 0)
+    got = sorted(
+        r["doc_id"]
+        for r in spark.read.schema("doc_id long, text string")
+        .json(str(tmp_path / "sink" / "batch-0"))
+        .collect()
+    )
+    want = sorted(
+        r["doc_id"]
+        for r in bloom_window_gate(batch, bits, 524288, 3)
+        .select(F.col("doc_id"))
+        .collect()
+    )
+    assert got == want == [11, 13]
+
+
 @slow_tier
 def test_incremental_corpus_stream_crash_between_fold_ins(spark, tmp_path):
     """Replay-stability in the EXACT crash window the fold-ins open

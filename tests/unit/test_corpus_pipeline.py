@@ -50,6 +50,26 @@ def test_unknown_op_and_option_fail_at_build(spark):
         CorpusPipeline([{"op": "filter"}])
 
 
+def test_hash_split_percentages_checked_at_build():
+    """train_pct/val_pct come from YAML: a negative value or a sum
+    over 100 would silently empty a split, so the pipeline refuses
+    them while it is constructed — before any DataFrame exists, so
+    before any job runs."""
+    bad = [
+        {"train_pct": 90, "val_pct": 20},
+        {"train_pct": -1},
+        {"val_pct": -5},
+        {"train_pct": "80"},
+    ]
+    for kw in bad:
+        with pytest.raises(ConfigError, match="hash_split"):
+            CorpusPipeline(
+                [{"op": "bpe_train_token_count"}, {"op": "hash_split", **kw}]
+            )
+    for kw in ({}, {"train_pct": 90, "val_pct": 10}, {"train_pct": 0, "val_pct": 0}):
+        CorpusPipeline([{"op": "hash_split", **kw}])
+
+
 def test_line_dedup_step_keeps_other_columns(spark):
     p = CorpusPipeline([{"op": "line_dedup"}])
     df = spark.createDataFrame(
@@ -328,10 +348,15 @@ def test_pretrain_v3_yaml_parity(spark, sf_dir, tmp_path):
     leakage_split -> cluster_dedup -> stored-Bloom decontaminate ->
     BPE trained on the train split + per-doc token budget) must land
     on the SAME per-split survivor counts and BPE token totals as the
-    hash-gated catalog query. (leakage_split runs before cluster_dedup
-    — for surviving representatives the cluster-id hash equals their
-    own-id hash, so either order tags survivors identically; before
-    matches the catalog query's construction.)"""
+    hash-gated catalog query AND as its DuckDB oracle over the same
+    parquet — the catalog row and the YAML steps share stage helpers,
+    so the oracle is the independent side of the check.
+    (leakage_split runs before cluster_dedup — for surviving
+    representatives the cluster-id hash equals their own-id hash, so
+    either order tags survivors identically; before matches the
+    catalog query's construction.)"""
+    import duckdb
+
     from logprep_spark.functions import dedup as dd
     from logprep_spark.functions import sketch as sk
     from logprep_spark.plans import catalog
@@ -387,6 +412,21 @@ pipeline:
         ).collect()
     }
     assert got == want
+
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    oracle = con.sql(catalog.oracle_sql()["pipeline_pretrain_v3"])
+    cols = oracle.columns
+    duck = {
+        r[cols.index("split")]: (
+            r[cols.index("n_final")], r[cols.index("bpe_tokens")]
+        )
+        for r in oracle.fetchall()
+    }
+    con.close()
+    assert got == duck
 
 
 def test_decontaminate_step_batch_stream_parity(spark, tmp_path):

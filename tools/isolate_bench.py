@@ -20,10 +20,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
+    args = sys.argv[1:]
     n = 3
-    if "--n" in sys.argv:
-        n = int(sys.argv[sys.argv.index("--n") + 1])
+    if "--n" in args:
+        i = args.index("--n")
+        n = int(args[i + 1])
+        del args[i : i + 2]
+    names = [a for a in args if not a.startswith("--")]
 
     from logprep_spark.plans import catalog
     from logprep_spark.session import get_spark
