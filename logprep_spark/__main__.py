@@ -350,13 +350,15 @@ def cmd_corpus_run(args) -> int:
         else reader.json(args.input)
     )
     if getattr(args, "stats", False):
-        out, observations = pipe.transform_observed(src)
+        build_s: dict[str, float] = {}
+        out, observations = pipe.transform_observed(src, build_s)
         out.write.mode("overwrite").format(args.format).save(args.output)
         prev = None
         for label, obs in observations.items():
             n = obs.get.get("n_docs", 0)
             kept = "" if prev in (None, 0) else f"\t({1000 * n // prev} milli kept)"
-            print(f"{label}\t{n} docs{kept}")
+            built = f"\tbuilt in {build_s[label]:.3f} s" if label in build_s else ""
+            print(f"{label}\t{n} docs{kept}{built}")
             prev = n
     else:
         out = pipe.transform(src)
@@ -468,7 +470,7 @@ def build_parser() -> argparse.ArgumentParser:
     cr.add_argument("--format", choices=("parquet", "json"), default="parquet")
     cr.add_argument("--stats", action="store_true",
                     help="print per-step retention counts (observe-based, "
-                    "zero extra scans)")
+                    "zero extra scans) and build wall times")
     cr.set_defaults(fn=cmd_corpus_run)
     return parser
 

@@ -31,11 +31,17 @@ lives in one helper that all of them call —
   vocabulary encode and per-doc token count (``bpe_token_count``,
   ``bpe_train_token_count``);
 - ``sketch.bloom_window_gate``: the k-gram Bloom decontamination gate
-  (``decontaminate``).
+  (``decontaminate``);
+- ``near_dup_clusters``: the (id, cluster_id) near-dup cluster frame
+  (``leakage_split``, ``cluster_dedup``). One ``transform`` call
+  builds it at most once per (text_col, id_col, threshold_milli), as
+  the catalog's ``pipeline_pretrain_v3`` does, and drops it after any
+  step that may remove docs or rewrite text.
 """
 
 from __future__ import annotations
 
+import time
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
@@ -251,25 +257,49 @@ def _step_bloom_suppress(
     return sk.bloom_suppress(df, bits, key_col, m=m, j=j)
 
 
+def near_dup_clusters(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold_milli: int,
+    memo: dict | None = None,
+) -> DataFrame:
+    """(``id_col``, cluster_id) verified near-dup clusters: MinHash->
+    LSH->verify pairs (dd.minhash_dedup), connected components
+    (dd.dup_clusters — every member labeled with the cluster's min
+    id). Only docs in some verified pair get a row. The component
+    loop runs eager jobs and leaves the labels checkpointed, so a
+    frame from ``memo`` (keyed on text_col, id_col, threshold_milli)
+    costs its next consumer no job at all — the caller owns the memo
+    and must drop it once the document set or the text can change."""
+    key = (text_col, id_col, threshold_milli)
+    if memo is not None and key in memo:
+        return memo[key]
+    pairs = dd.minhash_dedup(
+        df.select(id_col, text_col), text_col, id_col, threshold_milli / 1000.0
+    )
+    cl = dd.dup_clusters(pairs).withColumnRenamed("doc_id", id_col)
+    if memo is not None:
+        memo[key] = cl
+    return cl
+
+
 def _step_cluster_dedup(
     df: DataFrame,
     text_col: str,
     threshold_milli: int = 700,
     id_col: str = "doc_id",
+    *,
+    memo: dict | None = None,
 ) -> DataFrame:
     """Cluster-EXACT near-dup removal (near_dedup's transitive
-    sibling, the pipeline_pretrain_v3 stage): MinHash->LSH->verify
-    pairs, connected components (dd.dup_clusters — every member
-    labeled with the cluster's min id), keep exactly the min-id
-    representative per cluster. Greedy near_dedup can keep two
-    members of one chain-shaped cluster; this cannot. Batch-only."""
-    pairs = dd.minhash_dedup(
-        df.select(id_col, text_col),
-        text_col,
-        id_col,
-        threshold_milli / 1000.0,
-    )
-    cl = dd.dup_clusters(pairs)
+    sibling, the pipeline_pretrain_v3 stage): keep exactly the min-id
+    representative of every near_dup_clusters cluster. Greedy
+    near_dedup can keep two members of one chain-shaped cluster; this
+    cannot. After a leakage_split at the same threshold the clusters
+    come from the pipeline's memo and the step is a lazy anti-join.
+    Batch-only."""
+    cl = near_dup_clusters(df, text_col, id_col, threshold_milli, memo)
     kill = cl.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
     return df.join(kill, id_col, "left_anti")
 
@@ -355,25 +385,32 @@ def _step_leakage_split(
     threshold_milli: int = 700,
     id_col: str = "doc_id",
     out_col: str = "split",
+    *,
+    memo: dict | None = None,
 ) -> DataFrame:
     """GROUP-AWARE train/val/test tag (the split_leakage_free /
     pipeline_pretrain_v3 assignment): verified near-dup clusters are
     the atomic unit — every member hashes on the CLUSTER id
     (coalesce(cluster_id, doc_id)), so a cluster lands in one split
     whole and no verified pair can straddle train/test. The tag is a
-    narrow md5 map once the cluster frame exists."""
-    pairs = dd.minhash_dedup(
-        df.select(id_col, text_col),
-        text_col,
-        id_col,
-        threshold_milli / 1000.0,
-    )
-    cl = dd.dup_clusters(pairs).withColumnRenamed("cluster_id", "_cid")
+    narrow md5 map once the cluster frame exists. Every doc and its
+    text pass through, so a later cluster_dedup reuses the clusters
+    (see :func:`_keeps_clusters`)."""
+    cl = near_dup_clusters(df, text_col, id_col, threshold_milli, memo)
     return (
-        df.join(cl, id_col, "left")
+        df.join(cl.withColumnRenamed("cluster_id", "_cid"), id_col, "left")
         .withColumn(out_col, dd.split_tag(F.coalesce("_cid", id_col)))
         .drop("_cid")
     )
+
+
+def _keeps_clusters(op: str, kw: dict[str, Any], key: tuple) -> bool:
+    """Whether the cluster frame memoized under ``key`` (text_col,
+    id_col, threshold_milli) still describes the frame after step
+    ``op``. Only leakage_split is known to keep every doc and its
+    text, and only while its tag overwrites neither the text nor the
+    id column; any other step may drop rows or rewrite text."""
+    return op == "leakage_split" and kw.get("out_col", "split") not in key[:2]
 
 
 def _step_bpe_train_token_count(
@@ -513,13 +550,16 @@ STEPS: dict[str, Callable[..., DataFrame]] = {
 
 
 class CorpusPipeline:
-    """Validated, composable corpus-cleanup pipeline."""
+    """Validated, composable corpus-cleanup pipeline. A step's
+    keyword-only parameters (``memo``) are supplied by the pipeline,
+    never by the config."""
 
     def __init__(self, steps: list[dict[str, Any]], text_col: str = "text"):
         import inspect
 
         self.text_col = text_col
-        self._steps: list[tuple[str, Callable[[DataFrame], DataFrame]]] = []
+        # (op, step function, config options, takes the cluster memo)
+        self._steps: list[tuple[str, Callable[..., DataFrame], dict[str, Any], bool]] = []
         for i, spec in enumerate(steps):
             if not isinstance(spec, dict) or "op" not in spec:
                 raise ConfigError(f"corpus step {i}: every step needs an 'op'")
@@ -532,7 +572,8 @@ class CorpusPipeline:
                 )
             sig = inspect.signature(fn)
             for k in kw:
-                if k not in sig.parameters:
+                p = sig.parameters.get(k)
+                if p is None or p.kind is inspect.Parameter.KEYWORD_ONLY:
                     raise ConfigError(f"corpus step {i} ({op}): unknown option {k!r}")
             required = [
                 p.name
@@ -547,9 +588,7 @@ class CorpusPipeline:
             err = _check_hash_split(**kw) if op == "hash_split" else None
             if err:
                 raise ConfigError(f"corpus step {i} ({op}): {err}")
-            self._steps.append(
-                (op, (lambda df, _fn=fn, _kw=kw: _fn(df, text_col=self.text_col, **_kw)))
-            )
+            self._steps.append((op, fn, kw, "memo" in sig.parameters))
 
     @classmethod
     def from_file(cls, path: str) -> "CorpusPipeline":
@@ -560,34 +599,58 @@ class CorpusPipeline:
             raise ConfigError("corpus config needs a non-empty 'pipeline' list")
         return cls(steps, text_col=spec.get("text_col", "text"))
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        for _, fn in self._steps:
-            df = fn(df)
+    def _apply(
+        self,
+        df: DataFrame,
+        after: Callable[[DataFrame, str, float], DataFrame] | None = None,
+    ) -> DataFrame:
+        """Compose every step onto ``df``; ``after(frame, label,
+        build_s)`` may wrap each step's output before the next step
+        sees it. One near-dup cluster memo serves the whole call
+        (near_dup_clusters), so leakage_split and a later
+        cluster_dedup at the same threshold build the clusters once;
+        entries a step may have invalidated are dropped after it."""
+        memo: dict[tuple, DataFrame] = {}
+        for i, (op, fn, kw, takes_memo) in enumerate(self._steps):
+            t0 = time.perf_counter()
+            extra = {"memo": memo} if takes_memo else {}
+            df = fn(df, text_col=self.text_col, **kw, **extra)
+            built = time.perf_counter() - t0
+            for key in [k for k in memo if not _keeps_clusters(op, kw, k)]:
+                del memo[key]
+            if after is not None:
+                df = after(df, f"{i}:{op}", built)
         return df
 
-    def transform_observed(self, df: DataFrame):
+    def transform(self, df: DataFrame) -> DataFrame:
+        return self._apply(df)
+
+    def transform_observed(
+        self, df: DataFrame, build_s: dict[str, float] | None = None
+    ):
         """``transform`` plus per-step retention counters at ZERO extra
         scans: an ``Observation`` (input) plus one after every step all
         ride the SAME plan, so the single terminal action (the write)
         fills every counter — per-step retention without the N-counts
         = N-jobs trap. Returns ``(df, observations)`` where
         ``observations`` is an ordered {label: Observation}; read
-        ``obs.get['n_docs']`` AFTER an action has run."""
+        ``obs.get['n_docs']`` AFTER an action has run. When given,
+        ``build_s`` receives each step's build wall seconds under the
+        same labels — the time its eager jobs (cluster loops, model
+        fetches) ran."""
         from pyspark.sql import Observation
-        from pyspark.sql import functions as F
 
         observations: dict[str, Any] = {}
 
-        def attach(frame: DataFrame, label: str) -> DataFrame:
+        def attach(frame: DataFrame, label: str, built: float | None = None) -> DataFrame:
+            if build_s is not None and built is not None:
+                build_s[label] = built
             obs = Observation()
             observations[label] = obs
             return frame.observe(obs, F.count(F.lit(1)).alias("n_docs"))
 
-        df = attach(df, "input")
-        for i, (name, fn) in enumerate(self._steps):
-            df = attach(fn(df), f"{i}:{name}")
-        return df, observations
+        return self._apply(attach(df, "input"), attach), observations
 
     @property
     def step_names(self) -> list[str]:
-        return [n for n, _ in self._steps]
+        return [op for op, *_ in self._steps]

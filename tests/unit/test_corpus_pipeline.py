@@ -1,6 +1,8 @@
 """Config-driven corpus pipeline (logprep_spark/corpus.py): the §2.4
 operators composed from YAML the way the log half composes processors."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -214,6 +216,120 @@ def test_c4_and_quality_model_steps_honor_id_col(spark):
     assert "prob_milli" in out.columns and "page_id" in out.columns
 
 
+def _chain_docs(spark, id_col="doc_id"):
+    """Docs 1~2 and 2~3 verified near-dups at threshold 750 (shingle
+    Jaccard 0.82) but 1 vs 3 not (0.67), so {1, 2, 3} is one cluster
+    only through doc 2; doc 4 shares nothing."""
+    words = [f"tok{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(60)]
+    other = "completely different content about spark partitions and joins"
+    return spark.createDataFrame(
+        [(i + 1, " ".join(words[4 * i : 4 * i + 42])) for i in range(3)]
+        + [(4, other)],
+        [id_col, "text"],
+    )
+
+
+def test_cluster_steps_honor_id_col(spark):
+    """leakage_split and cluster_dedup run on a corpus keyed by
+    ``page_id`` (dd.dup_clusters names its id ``doc_id``; the shared
+    cluster helper hands back the caller's id column) — both
+    composed in one pipeline and each in a pipeline of its own."""
+    df = _chain_docs(spark, "page_id")
+    steps = [
+        {"op": "leakage_split", "threshold_milli": 750, "id_col": "page_id"},
+        {"op": "cluster_dedup", "threshold_milli": 750, "id_col": "page_id"},
+    ]
+    out = CorpusPipeline(steps).transform(df)
+    assert sorted(r.page_id for r in out.collect()) == [1, 4]
+    assert "split" in out.columns
+
+    tagged = CorpusPipeline(steps[:1]).transform(df).collect()
+    assert len({r.split for r in tagged if r.page_id <= 3}) == 1  # one cluster, one split
+    alone = CorpusPipeline(steps[1:]).transform(df)
+    assert sorted(r.page_id for r in alone.collect()) == [1, 4]
+
+
+def _count_dup_clusters(monkeypatch) -> list:
+    from logprep_spark.functions import dedup as dd
+
+    calls = []
+    real = dd.dup_clusters
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(dd, "dup_clusters", counting)
+    return calls
+
+
+def test_cluster_frame_built_once_per_transform(spark, monkeypatch):
+    """The pretrain-v3 order leakage_split -> cluster_dedup at one
+    threshold builds the near-dup clusters ONCE per transform /
+    transform_observed call, and lands on exactly what the two steps
+    give when each runs as its own pipeline: survivors, split tags
+    and every per-step retention count."""
+    df = _chain_docs(spark).union(
+        spark.createDataFrame(
+            [(5, "a short unrelated note"), (6, "a short unrelated note")],
+            ["doc_id", "text"],
+        )
+    )
+    steps = [
+        {"op": "filter", "where": "doc_id != 4"},
+        {"op": "leakage_split", "threshold_milli": 750},
+        {"op": "cluster_dedup", "threshold_milli": 750},
+    ]
+    calls = _count_dup_clusters(monkeypatch)
+    shared = sorted(map(tuple, CorpusPipeline(steps).transform(df).collect()))
+    assert len(calls) == 1
+    out, obs = CorpusPipeline(steps).transform_observed(df)
+    observed = sorted(map(tuple, out.collect()))
+    assert len(calls) == 2
+
+    counts, frame = {}, df
+    for i, step in enumerate(steps):
+        frame, step_obs = CorpusPipeline([step]).transform_observed(frame)
+        frame.count()
+        if i == 0:
+            counts["input"] = step_obs["input"].get["n_docs"]
+        counts[f"{i}:{step['op']}"] = step_obs[f"0:{step['op']}"].get["n_docs"]
+    unshared = sorted(map(tuple, frame.collect()))
+    assert len(calls) == 4
+    assert shared == observed == unshared
+    assert [r[0] for r in shared] == [1, 5]
+    assert {k: o.get["n_docs"] for k, o in obs.items()} == counts == {
+        "input": 6, "0:filter": 5, "1:leakage_split": 5, "2:cluster_dedup": 2,
+    }
+
+
+def test_stale_cluster_frame_never_reused(spark, monkeypatch):
+    """A step that can drop docs invalidates the shared cluster frame:
+    with doc 2 (the only link between 1 and 3) filtered out after
+    leakage_split, cluster_dedup must re-cluster and keep both 1 and
+    3 — the stale {1, 2, 3} cluster would drop 3. Different
+    thresholds never share a frame either."""
+    df = _chain_docs(spark)
+    calls = _count_dup_clusters(monkeypatch)
+    out = CorpusPipeline([
+        {"op": "leakage_split", "threshold_milli": 750},
+        {"op": "filter", "where": "doc_id != 2"},
+        {"op": "cluster_dedup", "threshold_milli": 750},
+    ]).transform(df)
+    assert sorted(r.doc_id for r in out.collect()) == [1, 3, 4]
+    assert len(calls) == 2
+
+    out = CorpusPipeline([
+        {"op": "leakage_split", "threshold_milli": 750},
+        {"op": "cluster_dedup", "threshold_milli": 600},
+    ]).transform(df)
+    assert sorted(r.doc_id for r in out.collect()) == [1, 4]
+    assert len(calls) == 4
+
+    with pytest.raises(ConfigError):  # the memo is never a config option
+        CorpusPipeline([{"op": "cluster_dedup", "memo": {}}])
+
+
 def test_near_dedup_step_drops_higher_id_near_dupes(spark):
     """r6 step: near_dedup removes the higher-id member of each
     verified MinHash near-dup pair and keeps everything else — with
@@ -277,6 +393,11 @@ def test_transform_observed_per_step_retention(spark, tmp_path, capsys):
     printed = capsys.readouterr().out
     assert "input\t3 docs" in printed
     assert "2:exact_dedup\t1 docs" in printed and "500 milli kept" in printed
+    # each step's build wall time sits beside its retention count
+    lines = {ln.split("\t")[0]: ln for ln in printed.splitlines()}
+    assert "built in" not in lines["input"]
+    for label in ("0:token_count", "1:filter", "2:exact_dedup"):
+        assert re.search(r"\tbuilt in \d+\.\d{3} s$", lines[label])
 
 
 def test_weighted_sample_step(spark):
