@@ -31,7 +31,8 @@ lives in one helper that all of them call —
   vocabulary encode and per-doc token count (``bpe_token_count``,
   ``bpe_train_token_count``);
 - ``sketch.bloom_window_gate``: the k-gram Bloom decontamination gate
-  (``decontaminate``);
+  (``decontaminate``); its streaming path probes the same
+  ``text.token_windows`` and ``sketch.bloom_positions``;
 - ``near_dup_clusters``: the (id, cluster_id) near-dup cluster frame
   (``leakage_split``, ``cluster_dedup``). One ``transform`` call
   builds it at most once per (text_col, id_col, threshold_milli), as
@@ -58,16 +59,23 @@ def _step_gopher_filter(
     return tx.gopher_filter(df, text_col=text_col, min_stop_hits=min_stop_hits)
 
 
-def _step_line_dedup(df: DataFrame, text_col: str, **kw) -> DataFrame:
-    out = dd.line_dedup(df, text_col=text_col, **kw)
-    # line_dedup returns (id, text, n_lines, n_removed); re-attach the
+def _step_line_dedup(
+    df: DataFrame,
+    text_col: str,
+    min_occurrences: int = 2,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    out = dd.line_dedup(
+        df, text_col=text_col, id_col=id_col, min_occurrences=min_occurrences
+    )
+    # line_dedup returns (id, text_col, n_lines, n_removed); re-attach the
     # surviving docs' other columns so downstream steps see them
     others = df.drop(text_col)
-    return out.drop("n_lines", "n_removed").join(others, "doc_id")
+    return out.drop("n_lines", "n_removed").join(others, id_col)
 
 
-def _step_exact_dedup(df: DataFrame, text_col: str, **kw) -> DataFrame:
-    return dd.exact_dedup(df, text_col=text_col, **kw)
+def _step_exact_dedup(df: DataFrame, text_col: str, id_col: str = "doc_id") -> DataFrame:
+    return dd.exact_dedup(df, text_col=text_col, id_col=id_col)
 
 
 def _step_near_dedup(
@@ -341,26 +349,14 @@ def _step_decontaminate(
     # literal. No join, no shuffle, no state — append-mode-safe,
     # and incidentally the shape a 100 TB batch gate would also
     # prefer once the filter fits a literal (m/32 longs of plan).
-    from logprep_spark.functions.dedup import h60
-    from logprep_spark.functions.text import tokens
-
     words32 = [0] * ((m + 31) // 32)
     for r in bits.collect():
         words32[r["pos"] // 32] |= 1 << (r["pos"] % 32)
     bm = F.array(*[F.lit(w).cast("long") for w in words32])
     pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    wins = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )
+    wins = tx.token_windows(tx.tokens(F.col(text_col)), k)
 
-    def bit_set(i: int, w):
-        pos = F.pmod(
-            h60(F.concat(F.lit(f"{i}:"), h60(w).cast("string"))),
-            F.lit(m),
-        )
+    def bit_set(pos):
         word = F.element_at(
             bm, (F.floor(pos / 32) + 1).cast("int")
         )
@@ -373,7 +369,8 @@ def _step_decontaminate(
     hit = F.exists(
         wins,
         lambda w: functools.reduce(
-            operator.and_, [bit_set(i, w) for i in range(j)]
+            operator.and_,
+            [bit_set(pos) for pos in sk.bloom_positions(dd.h60(w), m, j)],
         ),
     )
     return df.filter(~hit)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logprep_spark.functions.text import tokens
+from logprep_spark.functions.text import token_windows, tokens
 
 NUM_PERM = 16
 BAND_ROWS = 4
@@ -82,13 +82,7 @@ def shingles_of(toks: Column, k: int = 3) -> Column:
     Callers must project the token array in its own select first —
     multiple references to a non-cheap expression also stop Catalyst's
     CollapseProject from inlining it back."""
-    n = F.size(toks)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        )
-    )
+    return F.array_distinct(token_windows(toks, k))
 
 
 def shingle_arrays(
@@ -242,13 +236,8 @@ def substring_dup_spans(
     from pyspark.sql import Window
 
     toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    n = F.size("_toks")
-    win_arr = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice("_toks", i, k), " "),
-    )
     wins = toked.select(
-        F.col(id_col), F.posexplode(win_arr).alias("_pos0", "_w")
+        F.col(id_col), F.posexplode(token_windows("_toks", k)).alias("_pos0", "_w")
     ).select(
         id_col,
         (F.col("_pos0") + 1).cast("long").alias("pos"),
@@ -336,13 +325,8 @@ def window_hashes(
     semantics apply). Narrow explode; h60 md5 hashes so both
     engines fingerprint identically."""
     toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    n = F.size("_toks")
-    arr = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice("_toks", i, k), " "),
-    )
     return toked.select(
-        F.col(id_col), F.explode(arr).alias("_w")
+        F.col(id_col), F.explode(token_windows("_toks", k)).alias("_w")
     ).select(id_col, h60(F.col("_w")).alias("window_hash"))
 
 
@@ -416,21 +400,22 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
 
     The self-join shuffles only (band_id, band_key) — never the text.
 
-    ``materialize`` persists the signature frame (num_perm longs per
-    doc — tiny next to the text) before the self-join: the two join
-    sides project different id aliases, so Spark's exchange reuse
-    can't kick in and an unpersisted plan would run the whole
+    The signature frame (num_perm longs per doc — tiny next to the
+    text) is persisted before the self-join: the two join sides
+    project different id aliases, so Spark's exchange reuse can't
+    kick in and an unpersisted plan would run the whole
     shingle+hash subtree twice. This is the LSH-pipeline equivalent of
     writing a signature stage table — at 100 TB you'd checkpoint it to
     parquet; MEMORY_AND_DISK is the in-session version (measured ~2x
     end-to-end at sf0.1).
     """
+    from pyspark.storagelevel import StorageLevel
+
     from logprep_spark.session import fan_out
 
     # the testdata parquet arrives as ONE input split (single row
@@ -439,11 +424,9 @@ def minhash_lsh_pairs(
     # Measured at sf0.1 (post-JIT): full pipeline 5.0s single-partition
     # vs 2.4s fanned out. No-op when the input is already parallel.
     df = fan_out(df)
-    sig = minhash_signature_df(df, text_col, id_col)
-    if materialize:
-        from pyspark.storagelevel import StorageLevel
-
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig = minhash_signature_df(df, text_col, id_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     bands = bands_from_signature(sig, id_col)
     left = bands.select(
         F.col("band_id"), F.col("band_key"), F.col(id_col).alias("id_a")
@@ -928,8 +911,8 @@ def line_dedup(
     times in the corpus is kept only at its first corpus occurrence
     (lowest (doc_id, line_no)) and dropped everywhere else.
 
-    Returns one row per input document: (id, text [lines rejoined with
-    ``sep``], n_lines, n_removed). A document whose every line is
+    Returns one row per input document: (id, text_col [lines rejoined
+    with ``sep``], n_lines, n_removed). A document whose every line is
     removed keeps an empty-string text.
 
     Distributed shape: posexplode the split (narrow), per-hash
@@ -981,7 +964,7 @@ def line_dedup(
                     F.array_sort(F.collect_list(kept_struct)), lambda s: s["_line"]
                 ),
                 sep,
-            ).alias("text"),
+            ).alias(text_col),
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.when(F.col("_keep"), 0).otherwise(1)).alias("n_removed"),
         )
@@ -1012,11 +995,7 @@ def winnow_fingerprints(
     only the ~2/(w+1)-selected minima explode); the ONLY shuffle is
     the fingerprint-keyed partial agg."""
     toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    n = F.size("_toks")
-    kh = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: h60(F.array_join(F.slice("_toks", i, k), " ")),
-    )
+    kh = token_windows("_toks", k, each=h60)
     staged = toked.select(F.col(id_col), kh.alias("_kh"))
     m = F.size("_kh")
     sel = F.array_distinct(

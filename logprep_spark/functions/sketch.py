@@ -638,6 +638,25 @@ def theta_audience_diff(
     )
 
 
+def bloom_positions(col: Column, m: int, j: int) -> list[Column]:
+    """The ``j`` Bloom bit positions of value ``col``:
+    ``h60(i || ':' || v) mod m`` for ``i < j``. The one position hash
+    every Bloom build, probe, gate and stream twin uses, so a filter
+    built anywhere answers probes made anywhere else."""
+    return [
+        F.pmod(h60(F.concat(F.lit(f"{i}:"), col.cast("string"))), F.lit(m))
+        for i in range(j)
+    ]
+
+
+def cm_cells(col: Column, d: int, w: int) -> list[Column]:
+    """The ``d`` Count-Min columns of item ``col``, one per hash row
+    ``r``: ``h60(r || ':' || item) mod w`` — the Bloom position hash
+    with the row as salt. Every CM build, probe and stream twin uses
+    it."""
+    return bloom_positions(col, w, d)
+
+
 def cm_sketch(
     df: DataFrame,
     item_col: str,
@@ -663,21 +682,7 @@ def cm_sketch(
     shuffle is O(d*w) bytes per partition at ANY input size, which is
     the whole point of a CM sketch. Merging sketches of two corpora
     is cell-wise addition (see pytest mergeability gate)."""
-    cell = F.posexplode(
-        F.array(
-            *[
-                F.pmod(
-                    h60(
-                        F.concat(
-                            F.lit(f"{r}:"), F.col(item_col).cast("string")
-                        )
-                    ),
-                    F.lit(w),
-                )
-                for r in range(d)
-            ]
-        )
-    )
+    cell = F.posexplode(F.array(*cm_cells(F.col(item_col), d, w)))
     return (
         df.filter(F.col(item_col).isNotNull())
         .select(cell.alias("row", "col"))
@@ -710,21 +715,7 @@ def cm_point_estimates(
     ``df`` is then touched only by the exact witness."""
     if sketch is None:
         sketch = cm_sketch(df, item_col, d, w)
-    probe_cell = F.posexplode(
-        F.array(
-            *[
-                F.pmod(
-                    h60(
-                        F.concat(
-                            F.lit(f"{r}:"), F.col(item_col).cast("string")
-                        )
-                    ),
-                    F.lit(w),
-                )
-                for r in range(d)
-            ]
-        )
-    )
+    probe_cell = F.posexplode(F.array(*cm_cells(F.col(item_col), d, w)))
     probes = queries.select(F.col(item_col), probe_cell.alias("row", "col"))
     est = (
         probes.join(F.broadcast(sketch), ["row", "col"], "left")
@@ -766,21 +757,7 @@ def bloom_bits(
     distinct collapses to <= m rows in the partial agg — O(m) shuffle
     bytes at any input cardinality. The stored artifact is the
     position frame; probing never re-reads the build-side raw data."""
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(
-                    h60(
-                        F.concat(
-                            F.lit(f"{i}:"), F.col(value_col).cast("string")
-                        )
-                    ),
-                    F.lit(m),
-                )
-                for i in range(j)
-            ]
-        )
-    )
+    pos = F.explode(F.array(*bloom_positions(F.col(value_col), m, j)))
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(pos.alias("pos"))
@@ -813,21 +790,7 @@ def bloom_membership(
     by the exact-overlap witness."""
     if bits is None:
         bits = bloom_bits(build_df, value_col, m, j)
-    probe_pos = F.posexplode(
-        F.array(
-            *[
-                F.pmod(
-                    h60(
-                        F.concat(
-                            F.lit(f"{i}:"), F.col(value_col).cast("string")
-                        )
-                    ),
-                    F.lit(m),
-                )
-                for i in range(j)
-            ]
-        )
-    )
+    probe_pos = F.posexplode(F.array(*bloom_positions(F.col(value_col), m, j)))
     probes = probe_df.filter(F.col(value_col).isNotNull()).select(
         value_col
     ).distinct()
@@ -1072,12 +1035,8 @@ def bloom_suppress(
     # broadcast materializes once per execution and the other j-1
     # probes ride stage reuse.
     b_shared = bits.select("pos").distinct()
-    for i in range(j):
+    for i, probe in enumerate(bloom_positions(F.col(value_col), m, j)):
         b = b_shared.select(F.col("pos").alias(f"_bp{i}"))
-        probe = F.pmod(
-            h60(F.concat(F.lit(f"{i}:"), F.col(value_col).cast("string"))),
-            F.lit(m),
-        )
         out = out.join(F.broadcast(b), probe == F.col(f"_bp{i}"), "left")
         hit = hit & F.col(f"_bp{i}").isNotNull()
     out = out.withColumn("_hit", hit)

@@ -11,6 +11,8 @@ md5) so the DuckDB oracle can replicate results bit-for-bit.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +35,27 @@ def marker_regex(words: list[str]) -> str:
 def tokens(col: Column) -> Column:
     """Whitespace tokenization with empties removed."""
     return F.filter(F.split(col, r"\s+"), lambda t: t != "")
+
+
+def token_windows(
+    toks: Column | str, k: int, each: Callable[[Column], Column] | None = None
+) -> Column:
+    """The positional k-token windows of a token array: window ``i``
+    joins tokens ``i .. i+k-1`` with one space; an array shorter than
+    k yields one window of all its tokens (``""`` for no tokens).
+    ``each`` maps every window inside the same lambda (``dedup.h60``
+    for window hashes) instead of a second pass over the array. The
+    one window expression shingles, window hashes, winnowing, span
+    and repetition detection and the streaming decontamination gate
+    share. Pass a token array projected in its own select first (see
+    ``dedup.shingles_of``): lambdas disable common-subexpression
+    elimination, so an inline ``tokens(text)`` re-splits per window."""
+    each = each or (lambda w: w)
+    n = F.size(toks)
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
+        lambda i: each(F.array_join(F.slice(toks, i, k), " ")),
+    )
 
 
 def words(col: Column) -> Column:
@@ -230,11 +253,7 @@ def repetition_signals(
     prefixes every shuffle key. No windows, no joins.
     """
     toked = df.select(F.col(id_col), tokens(F.lower(F.col(text_col))).alias("_toks"))
-    n = F.size("_toks")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-        lambda i: F.array_join(F.slice("_toks", i, 2), " "),
-    )
+    bigrams = token_windows("_toks", 2)
     staged = toked.select(F.col(id_col), F.col("_toks").alias("g1"), bigrams.alias("g2"))
     tagged = staged.select(
         F.col(id_col),

@@ -248,26 +248,6 @@ def stage_conditions(
     return df.withColumn(col_name, F.array(*conds))
 
 
-def matched_ids(n_rules: int, col_name: str = COND_COL) -> Column:
-    """``array<int>`` of matching rule indices from the staged verdict
-    array. Flat ``concat`` of per-rule singleton/empty arrays — NOT
-    ``array_compact(zip_with(...))``: higher-order functions are
-    CodegenFallback in Spark (interpreted, boxed, per-element lambda
-    frames), and at N rules x M rows that inner loop was the r14
-    bench's single hottest line (rules_dispatch_labels 63 s at sf0.1;
-    see OPTIMIZATION_r14.md). ``concat``/``when`` stay inside
-    whole-stage codegen — identical output, guide §4.1 built-ins-over-
-    lambda applied to the JVM expression layer itself."""
-    return F.concat(
-        *[
-            F.when(F.col(col_name)[i], F.array(F.lit(i))).otherwise(
-                F.array().cast("array<int>")
-            )
-            for i in range(n_rules)
-        ]
-    )
-
-
 def transform_once(processor, df: DataFrame) -> DataFrame:
     """Generic match-once transform: stage all conditions in ONE
     projection, then run each rule's ``apply_rule`` against its staged
@@ -525,9 +505,9 @@ def pre_detector_alerts(
     flat in the rule count.
 
     The matched-index list is built as ONE ``concat_ws`` string and
-    split (r14: codegen, zero per-rule allocations — the
-    ``matched_ids`` concat-of-arrays form pays one ArrayData copy per
-    rule per row, and a staged verdict array is a CollapseProject
+    split (r14: codegen, zero per-rule allocations — a
+    concat-of-singleton-arrays form pays one ArrayData copy per rule
+    per row, and a staged verdict array is a CollapseProject
     inlining bomb at N² expression nodes; same exploded rows).
 
     Column parity with ``detections``: same names; ``mitre`` is an

@@ -4003,13 +4003,13 @@ def dedup_clusters(spark, sf_dir):
 @register(
     "split_leakage_free",
     f"""
-    WITH RECURSIVE {_sql_minhash_bands()}, verified AS (
+    WITH RECURSIVE {_sql_minhash_bands()}, verified AS MATERIALIZED (
         SELECT id_a, id_b
         FROM pairs
         JOIN sh sa ON sa.doc_id = id_a
         JOIN sh sb ON sb.doc_id = id_b
         WHERE {_SQL_JACCARD} >= 0.7
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM verified
         UNION
         SELECT id_b, id_a FROM verified
@@ -4024,7 +4024,7 @@ def dedup_clusters(spark, sf_dir):
                coalesce(cl.cluster_id, d.doc_id) AS gid,
                cl.doc_id IS NOT NULL AS clustered
         FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id
-    ), asn AS (
+    ), asn AS MATERIALIZED (
         SELECT doc_id, clustered,
                CASE WHEN {_sql_h60("'split:' || gid::varchar")} % 100 < 80
                       THEN 'train'
@@ -4070,7 +4070,10 @@ def split_leakage_free(spark, sf_dir):
     not hypothetical). Scale: the split itself is a narrow hash map
     over the (doc, cluster) frame; clustering cost is the dedup
     pipeline already being run; the witness joins the tiny verified
-    pair list to the assignment twice (AQE equi-joins)."""
+    pair list to the assignment twice (AQE equi-joins). The oracle's
+    ``verified`` / ``edges`` / ``asn`` CTEs are MATERIALIZED: DuckDB
+    inlines a plain CTE into each reference, so every recursive walk
+    step re-ran the MinHash verify."""
     from pyspark.storagelevel import StorageLevel
 
     docs = tables(spark, sf_dir)["documents"]
@@ -11631,13 +11634,10 @@ def dedup_pair_lcs(spark, sf_dir):
     toked = docs.join(pair_ids, "doc_id", "left_semi").select(
         "doc_id", dd.tokens(F.col("text")).alias("_toks")
     )
-    n = F.size("_toks")
-    win_arr = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice("_toks", i, k), " "),
-    )
     wins = (
-        toked.select("doc_id", F.posexplode(win_arr).alias("_pos0", "_w"))
+        toked.select(
+            "doc_id", F.posexplode(tx.token_windows("_toks", k)).alias("_pos0", "_w")
+        )
         .select(
             "doc_id",
             (F.col("_pos0") + 1).cast("long").alias("pos"),
@@ -19412,36 +19412,36 @@ def corpus_dup_density(spark, sf_dir):
                    (8 * count(*) OVER () + 9) // 10 AS rank_cut
             FROM documents
         ) WHERE rn = rank_cut
-    ), {_sql_minhash_bands()}, verified AS (
+    ), {_sql_minhash_bands()}, verified AS MATERIALIZED (
         SELECT id_a, id_b
         FROM pairs
         JOIN sh sa ON sa.doc_id = id_a
         JOIN sh sb ON sb.doc_id = id_b
         WHERE {_SQL_JACCARD} >= 0.7
-    ), kinds AS (
+    ), kinds AS MATERIALIZED (
         SELECT id_a, id_b,
                CASE WHEN id_b <= cut_id THEN 'base'
                     WHEN id_a > cut_id THEN 'delta'
                     ELSE 'bridge' END AS kind
         FROM verified, cutq
-    ), eb AS (
+    ), eb AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM kinds WHERE kind = 'base'
         UNION SELECT id_b, id_a FROM kinds WHERE kind = 'base'
     ), walk_b(id, label) AS (
         SELECT src, src FROM eb
         UNION
         SELECT e.src, w.label FROM eb e JOIN walk_b w ON w.id = e.dst
-    ), base_cl AS (
+    ), base_cl AS MATERIALIZED (
         SELECT id AS doc_id, min(label) AS cluster_id FROM walk_b GROUP BY id
-    ), store AS (
+    ), store AS MATERIALIZED (
         SELECT d.doc_id, coalesce(bc.cluster_id, d.doc_id) AS gid0
         FROM documents d JOIN cutq ON d.doc_id <= cutq.cut_id
         LEFT JOIN base_cl bc ON bc.doc_id = d.doc_id
-    ), bridge_g AS (
+    ), bridge_g AS MATERIALIZED (
         SELECT k.id_b AS id_a, s.gid0 AS id_b
         FROM kinds k JOIN store s ON s.doc_id = k.id_a
         WHERE k.kind = 'bridge'
-    ), em AS (
+    ), em AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM kinds WHERE kind = 'delta'
         UNION SELECT id_b, id_a FROM kinds WHERE kind = 'delta'
         UNION SELECT id_a, id_b FROM bridge_g
@@ -19450,16 +19450,16 @@ def corpus_dup_density(spark, sf_dir):
         SELECT src, src FROM em
         UNION
         SELECT e.src, w.label FROM em e JOIN walk_m w ON w.id = e.dst
-    ), merge_cl AS (
+    ), merge_cl AS MATERIALIZED (
         SELECT id, min(label) AS label FROM walk_m GROUP BY id
-    ), ef AS (
+    ), ef AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM verified
         UNION SELECT id_b, id_a FROM verified
     ), walk_f(id, label) AS (
         SELECT src, src FROM ef
         UNION
         SELECT e.src, w.label FROM ef e JOIN walk_f w ON w.id = e.dst
-    ), full_cl AS (
+    ), full_cl AS MATERIALIZED (
         SELECT id AS doc_id, min(label) AS cluster_id FROM walk_f GROUP BY id
     ), asn AS (
         SELECT d.doc_id,
@@ -19475,7 +19475,7 @@ def corpus_dup_density(spark, sf_dir):
         LEFT JOIN merge_cl ms ON ms.id = s.gid0
         LEFT JOIN merge_cl md ON md.id = d.doc_id
         LEFT JOIN full_cl fc ON fc.doc_id = d.doc_id
-    ), tagged AS (
+    ), tagged AS MATERIALIZED (
         SELECT doc_id, is_base, gid0, fgid, rgid,
                CASE WHEN {_sql_h60("'gsplit:' || fgid::varchar")} % 100 < 80
                       THEN 'train'
@@ -19553,7 +19553,11 @@ def split_incremental_atomic(spark, sf_dir):
     (band store, shingle store, cluster store — O(store) artifacts);
     the recompute branch exists for the witness and would be a
     sampled audit at 100 TB; the cut comes from the two-pass global
-    rank (plans/ranks.py), no partition-less window anywhere."""
+    rank (plans/ranks.py), no partition-less window anywhere. The
+    oracle's shared CTEs are MATERIALIZED: DuckDB inlines a plain CTE
+    into each reference, so every step of the three recursive walks
+    re-ran the MinHash verify and the cluster store (10+ minutes at
+    sf0.001 instead of seconds)."""
     from logprep_spark.plans.ranks import with_global_rank
 
     docs = tables(spark, sf_dir)["documents"]

@@ -7,15 +7,48 @@ Two state strategies, chosen per op:
   semantics are genuinely custom (running totals with per-key
   timeout). Per-key state is a tiny tuple, so state store pressure is
   bounded by cardinality, not traffic.
+
+Every custom operator goes through two helpers:
+- :func:`_apply_state` is the one ``applyInPandasWithState`` wiring
+  (group, update output mode, timeout);
+- :func:`_window_stream` is the one event-time window state machine
+  the ``*_window_stream`` sketch and forecast twins share: fold each
+  batch into the window's state, time out at the window end, emit the
+  final row and drop the state. A twin supplies only its keyed
+  projection, its fold and its emit. The Bloom and Count-Min twins
+  hash with ``sketch.bloom_positions`` / ``sketch.cm_cells`` and the
+  theta and sample-quantile twins with ``dedup.h60``, the very
+  expressions of their batch sketches, so batch/stream parity comes
+  from shared code.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+
+def _apply_state(
+    df: DataFrame,
+    keys: list[str],
+    fn: Callable[..., Iterator[pd.DataFrame]],
+    out_schema: str,
+    state_schema: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """Group ``df`` on ``keys`` and run ``fn(key, pdfs, state)`` per
+    group and micro-batch, emitting in update mode."""
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=timeout,
+    )
 
 
 def dedupe_stream(
@@ -50,12 +83,13 @@ def running_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
     """Per-user running (count, sum) maintained across micro-batches —
     the ``applyInPandasWithState`` pattern for operators Spark's
     built-ins can't express. Emits one updated row per key per batch."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return _apply_state(
+        events,
+        ["user_id"],
         _totals_fn,
-        outputStructType=_TOTALS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=getattr(GroupStateTimeout, timeout, GroupStateTimeout.NoTimeout),
+        _TOTALS_SCHEMA,
+        _STATE_SCHEMA,
+        getattr(GroupStateTimeout, timeout, GroupStateTimeout.NoTimeout),
     )
 
 
@@ -79,8 +113,6 @@ def dedupe_near_stream(
     and belongs in a periodic batch pass — the stream pass catches the
     (dominant) signature-identical duplicates with bounded state.
     """
-    from pyspark.sql import functions as F
-
     from logprep_spark.functions.dedup import (
         MERSENNE_P,
         NUM_PERM,
@@ -142,7 +174,6 @@ def heavy_hitters_stream(
     no streaming analogue — candidates are the product here, feeding
     either an alert sink or a periodic batch verification pass.
     """
-    from pyspark.sql import functions as F
 
     def fn(
         key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -180,13 +211,7 @@ def heavy_hitters_stream(
     bucketed = events.withColumn(
         "_b", F.pmod(F.xxhash64(F.col(item_col)), F.lit(n_buckets))
     )
-    return bucketed.groupBy("_b").applyInPandasWithState(
-        fn,
-        outputStructType=_HH_OUT_SCHEMA,
-        stateStructType=_HH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_state(bucketed, ["_b"], fn, _HH_OUT_SCHEMA, _HH_STATE_SCHEMA)
 
 
 _ANOM_OUT_SCHEMA = (
@@ -219,8 +244,6 @@ def rate_anomaly_stream(
     z (9_999_999 milli) rather than dividing by zero; the first
     ``min_periods`` batches only learn, never alert."""
     import math
-
-    from pyspark.sql import functions as F
 
     def fn(
         key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -268,13 +291,7 @@ def rate_anomaly_stream(
         state.update((n, float(mean), float(m2)))
         yield out
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=_ANOM_OUT_SCHEMA,
-        stateStructType=_ANOM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_state(events, [key_col], fn, _ANOM_OUT_SCHEMA, _ANOM_STATE_SCHEMA)
 
 
 _BUCKET_OUT_SCHEMA = (
@@ -341,33 +358,13 @@ def token_bucket_stream(
     pressure is key cardinality, not traffic. Events replay in event-
     time order inside each batch so re-partitioned re-runs make the
     same allow/drop decisions."""
-    return events.groupBy(key_col).applyInPandasWithState(
+    return _apply_state(
+        events,
+        [key_col],
         _token_bucket_fn(capacity, refill_per_sec, ts_col),
-        outputStructType=_BUCKET_OUT_SCHEMA,
-        stateStructType=_BUCKET_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _BUCKET_OUT_SCHEMA,
+        _BUCKET_STATE_SCHEMA,
     )
-
-
-_THETA_OUT_SCHEMA = (
-    "slice string, win_start timestamp, est_distinct double, "
-    "n_kept long, is_final boolean, theta long, sample array<bigint>"
-)
-_THETA_STATE_SCHEMA = "hashes array<bigint>, win_end_ms long"
-
-#: 60-bit hash space twin of functions/sketch.py
-_THETA_H_MAX = 1 << 60
-
-_CM_OUT_SCHEMA = (
-    "win_start timestamp, row int, col int, cnt long, is_final boolean"
-)
-_CM_STATE_SCHEMA = "cols array<int>, cnts array<long>, win_end_ms long"
-
-_BLOOM_OUT_SCHEMA = (
-    "win_start timestamp, shard int, pos long, is_final boolean"
-)
-_BLOOM_STATE_SCHEMA = "poss array<long>, win_end_ms long"
 
 
 _DUR_UNITS = {
@@ -383,59 +380,68 @@ def _duration_seconds(spec: str) -> int:
     return int(n) * _DUR_UNITS[unit.lower()]
 
 
-def _theta_fn(value_col: str, window_sec: int, k: int):
-    import hashlib
+def _window_stream(
+    keyed: DataFrame,
+    keys: list[str],
+    window: str,
+    watermark: str,
+    out_schema: str,
+    state_schema: str,
+    fold: Callable[[tuple | None, Iterator[pd.DataFrame]], tuple],
+    emit: Callable[[tuple, tuple, bool], pd.DataFrame],
+) -> DataFrame:
+    """The event-time window state machine every ``*_window_stream``
+    twin runs; a twin supplies only ``keyed``, ``fold`` and ``emit``.
 
-    def emit(slice_v, win_start, hashes, final):
-        # rows carry the SKETCH itself (theta + retained sample), not
-        # just the estimate: the final rows are the stored mergeable
-        # artifact the batch algebra (theta_union_range /
-        # theta_audience_overlap) consumes directly — exact-mode
-        # convention matches theta_sketch_slices (theta = 2^60,
-        # sample = everything) so the union math is interchangeable
-        n = len(hashes)
-        if n < k:
-            est, theta, sample = float(n), _THETA_H_MAX, hashes
-        else:
-            theta = hashes[k - 1]
-            sample = hashes[: k - 1]
-            est = round((k - 1) * float(_THETA_H_MAX) / theta, 2)
-        return pd.DataFrame(
-            {
-                "slice": [slice_v],
-                "win_start": [win_start],
-                "est_distinct": [est],
-                "n_kept": [n],
-                "is_final": [final],
-                "theta": [theta],
-                "sample": [sample],
-            }
-        )
+    ``keyed`` is the twin's projection, grouped on ``keys`` (one of
+    them ``win_start``, the window's start). The state of a group is
+    an accumulator — a tuple of the ``state_schema`` fields — plus the
+    window end. Per batch, ``fold(acc, pdfs)`` merges the group's rows
+    into its accumulator (``acc`` is None for a new group), the state
+    is updated, the event-time timeout is set to the window end and
+    ``emit(key, acc, False)`` renders the running row(s). Once the
+    watermark passes the window end the timeout fires: the group emits
+    ``emit(key, acc, True)`` — its FINAL rows — and drops its state,
+    so the store holds only OPEN windows, one accumulator each.
+
+    The watermark is declared on ``win_start``: projecting
+    window(ts).start strips the event-time tag from ts, so lateness is
+    measured against window STARTS, which only shifts the horizon by
+    one fixed window length (fold it into ``watermark`` if exact
+    event-lateness semantics matter)."""
+    window_ms = _duration_seconds(window) * 1000
+    at = keys.index("win_start")
 
     def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
+        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        slice_v, win_start = key
         if state.hasTimedOut:
-            hashes, _ = state.get
-            yield emit(slice_v, win_start, list(hashes), True)
+            yield emit(key, state.get[:-1], True)
             state.remove()
             return
-        hs = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            for v in pdf[value_col]:
-                if v is None:
-                    continue
-                hs.add(int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16))
-        hashes = sorted(hs)[:k]
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        state.update((hashes, win_end_ms))
-        # evict when the watermark passes the window end: the state
-        # store holds only OPEN windows, each at most k longs
+        acc = fold(state.get[:-1] if state.exists else None, pdfs)
+        win_end_ms = int(key[at].value // 1_000_000) + window_ms
+        state.update((*acc, win_end_ms))
         state.setTimeoutTimestamp(win_end_ms)
-        yield emit(slice_v, win_start, hashes, False)
+        yield emit(key, acc, False)
 
-    return fn
+    return _apply_state(
+        keyed.withWatermark("win_start", watermark),
+        keys,
+        fn,
+        out_schema,
+        f"{state_schema}, win_end_ms long",
+        GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+_THETA_OUT_SCHEMA = (
+    "slice string, win_start timestamp, est_distinct double, "
+    "n_kept long, is_final boolean, theta long, sample array<bigint>"
+)
+
+#: 60-bit hash space twin of functions/sketch.py
+_THETA_H_MAX = 1 << 60
 
 
 def theta_window_stream(
@@ -449,11 +455,13 @@ def theta_window_stream(
 ) -> DataFrame:
     """Streaming twin of functions/sketch.py theta_sketch_slices: a
     per-(window, slice) KMV/theta sketch maintained through the
-    watermarked window state machinery (the L39 HLL streaming twin's
-    pattern, with the deterministic md5 family instead of HLL++ so
-    estimates are engine-exact and the EVICTED sketch rows are the
-    stored artifact the batch union/intersection algebra
-    (theta_union_range, theta_audience_overlap) consumes directly).
+    watermarked window state machine (:func:`_window_stream`; the L39
+    HLL streaming twin's pattern, with the deterministic md5 family —
+    ``dedup.h60``, hashed JVM-side exactly as the batch sketch does —
+    instead of HLL++ so estimates are engine-exact and the EVICTED
+    sketch rows are the stored artifact the batch union/intersection
+    algebra (theta_union_range, theta_audience_overlap) consumes
+    directly).
 
     State per open (window, slice) group is the k smallest 60-bit
     hashes — at most k longs, FIXED SIZE regardless of window traffic;
@@ -466,62 +474,57 @@ def theta_window_stream(
     stores raw values, the state store holds (open windows x slices x
     k) longs, and closed windows land as mergeable sketch rows any
     later ad-hoc range query unions in O(k) per slice."""
-    from pyspark.sql import functions as F
+    from logprep_spark.functions.dedup import h60
 
-    window_sec = _duration_seconds(window)
-    # the watermark must ride the column the stateful op sees:
-    # projecting window(ts).start strips the event-time tag from ts,
-    # so the delay is (re)declared on win_start — lateness is then
-    # measured against window STARTS, which only shifts the horizon
-    # by one fixed window length (fold it into `watermark` if exact
-    # event-lateness semantics matter)
     keyed = events.select(
         F.col(slice_col).cast("string").alias("slice"),
         F.window(ts_col, window).start.alias("win_start"),
-        F.col(value_col).cast("string").alias("_v"),
-    ).withWatermark("win_start", watermark)
-    return keyed.groupBy("slice", "win_start").applyInPandasWithState(
-        _theta_fn("_v", window_sec, k),
-        outputStructType=_THETA_OUT_SCHEMA,
-        stateStructType=_THETA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        # -1 marks a null value: its row still opens the group and
+        # advances the watermark, but adds no hash (h60 >= 0)
+        F.coalesce(h60(F.col(value_col).cast("string")), F.lit(-1)).alias("_h"),
     )
 
+    def fold(acc, pdfs):
+        hs = set(acc[0]) if acc else set()
+        for pdf in pdfs:
+            hs.update(int(h) for h in pdf["_h"] if h >= 0)
+        return (sorted(hs)[:k],)
 
-def _bloom_fn(window_sec: int):
-    def emit(win_start, shard, poss, final):
-        ps = sorted(poss)
+    def emit(key, acc, final):
+        # rows carry the SKETCH itself (theta + retained sample), not
+        # just the estimate: the final rows are the stored mergeable
+        # artifact — exact-mode convention matches theta_sketch_slices
+        # (theta = 2^60, sample = everything) so the union math is
+        # interchangeable
+        hashes = list(acc[0])
+        n = len(hashes)
+        if n < k:
+            est, theta, sample = float(n), _THETA_H_MAX, hashes
+        else:
+            theta = hashes[k - 1]
+            sample = hashes[: k - 1]
+            est = round((k - 1) * float(_THETA_H_MAX) / theta, 2)
         return pd.DataFrame(
             {
-                "win_start": [win_start] * len(ps),
-                "shard": [shard] * len(ps),
-                "pos": ps,
-                "is_final": [final] * len(ps),
+                "slice": [key[0]],
+                "win_start": [key[1]],
+                "est_distinct": [est],
+                "n_kept": [n],
+                "is_final": [final],
+                "theta": [theta],
+                "sample": [sample],
             }
         )
 
-    def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        win_start, shard = key
-        if state.hasTimedOut:
-            poss, _ = state.get
-            yield emit(win_start, shard, list(poss), True)
-            state.remove()
-            return
-        ps = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            ps.update(int(p) for p in pdf["_p"])
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        state.update((sorted(ps), win_end_ms))
-        # evict when the watermark passes the window end: the state
-        # store holds only OPEN windows, each shard <= ceil(m/shards)
-        # distinct positions
-        state.setTimeoutTimestamp(win_end_ms)
-        yield emit(win_start, shard, sorted(ps), False)
+    return _window_stream(
+        keyed, ["slice", "win_start"], window, watermark,
+        _THETA_OUT_SCHEMA, "hashes array<bigint>", fold, emit,
+    )
 
-    return fn
+
+_BLOOM_OUT_SCHEMA = (
+    "win_start timestamp, shard int, pos long, is_final boolean"
+)
 
 
 def bloom_window_stream(
@@ -536,13 +539,13 @@ def bloom_window_stream(
 ) -> DataFrame:
     """Streaming twin of functions/sketch.py bloom_bits: a per-window
     Bloom filter maintained through the watermarked window state
-    machinery (the theta/CM twins' pattern). Each event derives its j
-    bit positions JVM-side (``h60(i || ':' || v) mod m`` — the exact
-    md5 family of the batch sketch) and the stream is keyed by
-    ``(window, shard)`` with ``shard = pos mod n_shards``, so one
-    group's state is at most ceil(m / n_shards) distinct positions
-    (FIXED SIZE regardless of traffic) and a hot window's bit-set
-    spreads over n_shards tasks instead of funneling through one.
+    machine (:func:`_window_stream`). Each event derives its j bit
+    positions JVM-side with ``sketch.bloom_positions`` — the batch
+    sketch's own hash — and the stream is keyed by ``(window, shard)``
+    with ``shard = pos mod n_shards``, so one group's state is at
+    most ceil(m / n_shards) distinct positions (FIXED SIZE regardless
+    of traffic) and a hot window's bit-set spreads over n_shards tasks
+    instead of funneling through one.
 
     Eviction rides the event-time timeout: when the watermark passes
     the window end, the group emits its FINAL ``(shard, pos)`` rows
@@ -559,28 +562,9 @@ def bloom_window_stream(
     stored, the state store holds (open windows x n_shards) groups of
     <= m/n_shards longs, and closed windows land as position rows any
     later membership probe joins against in O(m) per window."""
-    from pyspark.sql import functions as F
+    from logprep_spark.functions.sketch import bloom_positions
 
-    from logprep_spark.functions.dedup import h60
-
-    window_sec = _duration_seconds(window)
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(
-                    h60(
-                        F.concat(
-                            F.lit(f"{i}:"), F.col(value_col).cast("string")
-                        )
-                    ),
-                    F.lit(m),
-                )
-                for i in range(j)
-            ]
-        )
-    )
-    # watermark re-declared on win_start after projecting the window
-    # start — same horizon note as theta_window_stream
+    pos = F.explode(F.array(*bloom_positions(F.col(value_col), m, j)))
     keyed = (
         events.filter(F.col(value_col).isNotNull())
         .select(
@@ -588,56 +572,34 @@ def bloom_window_stream(
             pos.alias("_p"),
         )
         .withColumn("shard", F.pmod("_p", F.lit(n_shards)).cast("int"))
-        .withWatermark("win_start", watermark)
-    )
-    return keyed.groupBy("win_start", "shard").applyInPandasWithState(
-        _bloom_fn(window_sec),
-        outputStructType=_BLOOM_OUT_SCHEMA,
-        stateStructType=_BLOOM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
+    def fold(acc, pdfs):
+        ps = set(acc[0]) if acc else set()
+        for pdf in pdfs:
+            ps.update(int(p) for p in pdf["_p"])
+        return (sorted(ps),)
 
-def _cm_fn(window_sec: int):
-    def emit(win_start, row, cells: dict, final):
-        cols = sorted(cells)
+    def emit(key, acc, final):
+        ps = sorted(acc[0])
         return pd.DataFrame(
             {
-                "win_start": [win_start] * len(cols),
-                "row": [row] * len(cols),
-                "col": cols,
-                "cnt": [cells[c] for c in cols],
-                "is_final": [final] * len(cols),
+                "win_start": [key[0]] * len(ps),
+                "shard": [key[1]] * len(ps),
+                "pos": ps,
+                "is_final": [final] * len(ps),
             }
         )
 
-    def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        win_start, row = key
-        if state.hasTimedOut:
-            cols, cnts, _ = state.get
-            yield emit(win_start, row, dict(zip(cols, cnts)), True)
-            state.remove()
-            return
-        if state.exists:
-            cols, cnts, _ = state.get
-            cells = dict(zip(cols, cnts))
-        else:
-            cells = {}
-        for pdf in pdfs:
-            for c, n in pdf["_c"].value_counts().items():
-                c = int(c)
-                cells[c] = cells.get(c, 0) + int(n)
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        state.update((sorted(cells), [cells[c] for c in sorted(cells)], win_end_ms))
-        # evict when the watermark passes the window end: the state
-        # store holds only OPEN windows, each at most w counters
-        state.setTimeoutTimestamp(win_end_ms)
-        yield emit(win_start, row, cells, False)
+    return _window_stream(
+        keyed, ["win_start", "shard"], window, watermark,
+        _BLOOM_OUT_SCHEMA, "poss array<long>", fold, emit,
+    )
 
-    return fn
+
+_CM_OUT_SCHEMA = (
+    "win_start timestamp, row int, col int, cnt long, is_final boolean"
+)
 
 
 def cm_window_stream(
@@ -651,9 +613,9 @@ def cm_window_stream(
 ) -> DataFrame:
     """Streaming twin of functions/sketch.py cm_sketch: a per-window
     Count-Min sketch maintained through the watermarked window state
-    machinery (the theta twin's pattern). Each event derives its d
-    ``(hash_row, col)`` cells JVM-side (md5, the same h60 family as
-    the batch sketch) and the stream is keyed by ``(window,
+    machine (:func:`_window_stream`). Each event derives its d
+    ``(hash_row, col)`` cells JVM-side with ``sketch.cm_cells`` — the
+    batch sketch's own hash — and the stream is keyed by ``(window,
     hash_row)`` — so one group's state is at most w counters (FIXED
     SIZE regardless of traffic) and the d rows of one window spread
     over d tasks instead of funneling the whole window through one.
@@ -671,42 +633,40 @@ def cm_window_stream(
     stored, the state store holds (open windows x d) groups of <= w
     longs, and closed windows land as sketch rows any later frequency
     query reads in O(d) per item."""
-    from pyspark.sql import functions as F
+    from logprep_spark.functions.sketch import cm_cells
 
-    from logprep_spark.functions.dedup import h60
-
-    window_sec = _duration_seconds(window)
     cell = F.posexplode(
-        F.array(
-            *[
-                F.pmod(
-                    h60(
-                        F.concat(
-                            F.lit(f"{r}:"), F.col(item_col).cast("string")
-                        )
-                    ),
-                    F.lit(w),
-                ).cast("int")
-                for r in range(d)
-            ]
-        )
+        F.array(*[c.cast("int") for c in cm_cells(F.col(item_col), d, w)])
     )
-    # watermark re-declared on win_start after projecting the window
-    # start — same horizon note as theta_window_stream
-    keyed = (
-        events.filter(F.col(item_col).isNotNull())
-        .select(
-            F.window(ts_col, window).start.alias("win_start"),
-            cell.alias("row", "_c"),
-        )
-        .withWatermark("win_start", watermark)
+    keyed = events.filter(F.col(item_col).isNotNull()).select(
+        F.window(ts_col, window).start.alias("win_start"),
+        cell.alias("row", "_c"),
     )
-    return keyed.groupBy("win_start", "row").applyInPandasWithState(
-        _cm_fn(window_sec),
-        outputStructType=_CM_OUT_SCHEMA,
-        stateStructType=_CM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+
+    def fold(acc, pdfs):
+        cells = dict(zip(*acc)) if acc else {}
+        for pdf in pdfs:
+            for c, n in pdf["_c"].value_counts().items():
+                c = int(c)
+                cells[c] = cells.get(c, 0) + int(n)
+        cols = sorted(cells)
+        return cols, [cells[c] for c in cols]
+
+    def emit(key, acc, final):
+        cols, cnts = acc
+        return pd.DataFrame(
+            {
+                "win_start": [key[0]] * len(cols),
+                "row": [key[1]] * len(cols),
+                "col": list(cols),
+                "cnt": list(cnts),
+                "is_final": [final] * len(cols),
+            }
+        )
+
+    return _window_stream(
+        keyed, ["win_start", "row"], window, watermark,
+        _CM_OUT_SCHEMA, "cols array<int>, cnts array<long>", fold, emit,
     )
 
 
@@ -714,57 +674,6 @@ _SQ_OUT_SCHEMA = (
     "slice string, win_start timestamp, n_rows long, n_kept long, "
     "is_final boolean, pool_h array<bigint>, pool_v array<double>"
 )
-_SQ_STATE_SCHEMA = (
-    "hs array<bigint>, vs array<double>, n_rows long, win_end_ms long"
-)
-
-
-def _sq_fn(window_sec: int, k: int):
-    def emit(slice_v, win_start, pairs, n_rows, final):
-        return pd.DataFrame(
-            {
-                "slice": [slice_v],
-                "win_start": [win_start],
-                "n_rows": [n_rows],
-                "n_kept": [len(pairs)],
-                "is_final": [final],
-                "pool_h": [[h for h, _ in pairs]],
-                "pool_v": [[v for _, v in pairs]],
-            }
-        )
-
-    def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        slice_v, win_start = key
-        if state.hasTimedOut:
-            hs, vs, n_rows, _ = state.get
-            yield emit(
-                slice_v, win_start, sorted(zip(hs, vs)), n_rows, True
-            )
-            state.remove()
-            return
-        if state.exists:
-            hs, vs, n_rows, _ = state.get
-            pairs = list(zip(hs, vs))
-        else:
-            pairs, n_rows = [], 0
-        for pdf in pdfs:
-            pairs.extend(
-                (int(h), float(v)) for h, v in zip(pdf["_h"], pdf["_v"])
-            )
-            n_rows += len(pdf)
-        # bottom-k merge is order-free: the same pairs in any batch /
-        # chunk order produce the same pool (the KMV determinism)
-        pairs = sorted(pairs)[:k]
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        state.update(
-            ([h for h, _ in pairs], [v for _, v in pairs], n_rows, win_end_ms)
-        )
-        state.setTimeoutTimestamp(win_end_ms)
-        yield emit(slice_v, win_start, pairs, n_rows, False)
-
-    return fn
 
 
 def sq_window_stream(
@@ -780,8 +689,8 @@ def sq_window_stream(
     """Streaming twin of functions/sketch.py sq_sketch_slices: a
     per-(window, slice) SAMPLE-QUANTILE sketch — the k rows with the
     smallest md5 row-key hashes, carried as (hash, value) pairs —
-    maintained through the watermarked window state machinery (the
-    theta twin's pattern; quantiles complete the streaming sketch
+    maintained through the watermarked window state machine
+    (:func:`_window_stream`; quantiles complete the streaming sketch
     family: theta/HLL cardinality, CM frequency, Bloom membership).
 
     Hashes derive JVM-side from the same md5 family as the batch
@@ -796,32 +705,111 @@ def sq_window_stream(
     event-time timeout (window end + watermark), emitting the final
     sketch row and removing the state. Update-mode rows carry the
     running pool for live dashboards."""
-    from pyspark.sql import functions as F
-
     from logprep_spark.functions.dedup import h60
 
-    window_sec = _duration_seconds(window)
-    # watermark horizon note: see theta_window_stream
-    keyed = (
-        events.filter(
-            F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        .select(
-            F.col(slice_col).cast("string").alias("slice"),
-            F.window(ts_col, window).start.alias("win_start"),
-            h60(
-                F.concat(F.lit("sq:"), F.col(key_col).cast("string"))
-            ).alias("_h"),
-            F.col(value_col).cast("double").alias("_v"),
-        )
-        .withWatermark("win_start", watermark)
+    keyed = events.filter(
+        F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
+    ).select(
+        F.col(slice_col).cast("string").alias("slice"),
+        F.window(ts_col, window).start.alias("win_start"),
+        h60(F.concat(F.lit("sq:"), F.col(key_col).cast("string"))).alias("_h"),
+        F.col(value_col).cast("double").alias("_v"),
     )
-    return keyed.groupBy("slice", "win_start").applyInPandasWithState(
-        _sq_fn(window_sec, k),
-        outputStructType=_SQ_OUT_SCHEMA,
-        stateStructType=_SQ_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+
+    def fold(acc, pdfs):
+        pairs = list(zip(acc[0], acc[1])) if acc else []
+        n_rows = acc[2] if acc else 0
+        for pdf in pdfs:
+            pairs.extend(
+                (int(h), float(v)) for h, v in zip(pdf["_h"], pdf["_v"])
+            )
+            n_rows += len(pdf)
+        # bottom-k merge is order-free: the same pairs in any batch /
+        # chunk order produce the same pool (the KMV determinism)
+        pairs = sorted(pairs)[:k]
+        return [h for h, _ in pairs], [v for _, v in pairs], n_rows
+
+    def emit(key, acc, final):
+        hs, vs, n_rows = acc
+        return pd.DataFrame(
+            {
+                "slice": [key[0]],
+                "win_start": [key[1]],
+                "n_rows": [n_rows],
+                "n_kept": [len(hs)],
+                "is_final": [final],
+                "pool_h": [list(hs)],
+                "pool_v": [list(vs)],
+            }
+        )
+
+    return _window_stream(
+        keyed, ["slice", "win_start"], window, watermark, _SQ_OUT_SCHEMA,
+        "hs array<bigint>, vs array<double>, n_rows long", fold, emit,
+    )
+
+
+def _tdiv(y: int, d: int) -> int:
+    """Truncate-toward-zero integer division, the Catalyst folds'
+    convention — int() on a positive-or-negative exact float would
+    drift; use explicit sign handling."""
+    q = abs(y) // d
+    return q if y >= 0 else -q
+
+
+def _period_stream(
+    events: DataFrame,
+    ts_col: str,
+    group_col: str,
+    window: str,
+    period: str,
+    watermark: str,
+    out_schema: str,
+    fold: Callable[[list[int]], dict[str, int]],
+) -> DataFrame:
+    """The holt / hw / cusum twins' shared body: per (group, window)
+    the state is the window's PERIOD event counts (e.g. hourly counts
+    inside a daily window) — at most windows/period counters, fixed
+    size at any traffic. Every emit runs ``fold`` over the counts in
+    period order and renders ``grp, win_start, n_periods``, the
+    fold's columns, then ``is_final``.
+
+    Determinism: counts accumulate order-free and the fold runs over
+    the SORTED period array only at emit time, so the final row is
+    bit-identical to the batch recurrence over the same rows'
+    per-period series — any arrival order, chunking, or
+    partitioning."""
+    period_sec = _duration_seconds(period)
+    # Catalyst rejects two window() expressions in one projection
+    # ("cartesian product of rows"); the period bucket is plain
+    # epoch arithmetic instead — same tumbling semantics
+    keyed = events.select(
+        F.col(group_col).cast("string").alias("grp"),
+        F.window(ts_col, window).start.alias("win_start"),
+        (
+            (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(F.col(ts_col)) % period_sec)
+            * 1000
+        ).alias("_p"),
+    )
+
+    def count(acc, pdfs):
+        pc = dict(zip(*acc)) if acc else {}
+        for pdf in pdfs:
+            for p in pdf["_p"]:
+                p = int(p)
+                pc[p] = pc.get(p, 0) + 1
+        ps = sorted(pc)
+        return ps, [pc[p] for p in ps]
+
+    def emit(key, acc, final):
+        xs = list(acc[1])
+        cols = {"grp": key[0], "win_start": key[1], "n_periods": len(xs)}
+        cols.update(fold(xs), is_final=final)
+        return pd.DataFrame({c: [v] for c, v in cols.items()})
+
+    return _window_stream(
+        keyed, ["grp", "win_start"], window, watermark, out_schema,
+        "periods array<long>, counts array<long>", count, emit,
     )
 
 
@@ -830,69 +818,23 @@ _HOLT_OUT_SCHEMA = (
     "trend_milli long, forecast_milli long, max_resid_milli long, "
     "is_final boolean"
 )
-_HOLT_STATE_SCHEMA = (
-    "periods array<long>, counts array<long>, win_end_ms long"
-)
 
 
-def _holt_fold(xs, a: int, b: int):
-    """The batch recurrence (plans/analytics.py holt_forecast),
-    truncate-toward-zero division — int() on a positive-or-negative
-    exact float would drift; use explicit sign handling."""
-
-    def tdiv(y, d):
-        q = abs(y) // d
-        return q if y >= 0 else -q
-
+def _holt_fold(xs, a: int, b: int) -> dict[str, int]:
+    """The batch recurrence (plans/analytics.py holt_forecast) in
+    truncate-toward-zero integer milli division."""
     l, t, r = xs[0] * 1000, 0, 0
     for x in xs[1:]:
         resid = abs(x * 1000 - (l + t))
-        l_new = tdiv(a * x * 1000 + (1000 - a) * (l + t), 1000)
-        t = tdiv(b * (l_new - l) + (1000 - b) * t, 1000)
+        l_new = _tdiv(a * x * 1000 + (1000 - a) * (l + t), 1000)
+        t = _tdiv(b * (l_new - l) + (1000 - b) * t, 1000)
         l, r = l_new, max(r, resid)
-    return l, t, r
-
-
-def _holt_fn(window_sec: int, alpha_milli: int, beta_milli: int):
-    def emit(grp, win_start, per_counts: dict, final):
-        xs = [per_counts[p] for p in sorted(per_counts)]
-        l, t, r = _holt_fold(xs, alpha_milli, beta_milli)
-        return pd.DataFrame(
-            {
-                "grp": [grp],
-                "win_start": [win_start],
-                "n_periods": [len(xs)],
-                "level_milli": [l],
-                "trend_milli": [t],
-                "forecast_milli": [l + t],
-                "max_resid_milli": [r],
-                "is_final": [final],
-            }
-        )
-
-    def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        grp, win_start = key
-        if state.hasTimedOut:
-            periods, counts, _ = state.get
-            yield emit(grp, win_start, dict(zip(periods, counts)), True)
-            state.remove()
-            return
-        pc: dict = (
-            dict(zip(*state.get[:2])) if state.exists else {}
-        )
-        for pdf in pdfs:
-            for p in pdf["_p"]:
-                p = int(p)
-                pc[p] = pc.get(p, 0) + 1
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        ps = sorted(pc)
-        state.update((ps, [pc[p] for p in ps], win_end_ms))
-        state.setTimeoutTimestamp(win_end_ms)
-        yield emit(grp, win_start, pc, False)
-
-    return fn
+    return {
+        "level_milli": l,
+        "trend_milli": t,
+        "forecast_milli": l + t,
+        "max_resid_milli": r,
+    }
 
 
 def holt_window_stream(
@@ -922,27 +864,9 @@ def holt_window_stream(
     (24 for hourly-in-daily) — fixed size at any traffic; eviction
     rides the event-time timeout. Update rows carry the running fit
     for live dashboards."""
-    from pyspark.sql import functions as F
-
-    window_sec = _duration_seconds(window)
-    period_sec = _duration_seconds(period)
-    # Catalyst rejects two window() expressions in one projection
-    # ("cartesian product of rows"); the period bucket is plain
-    # epoch arithmetic instead — same tumbling semantics
-    keyed = events.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.window(ts_col, window).start.alias("win_start"),
-        (
-            (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(F.col(ts_col)) % period_sec)
-            * 1000
-        ).alias("_p"),
-    ).withWatermark("win_start", watermark)
-    return keyed.groupBy("grp", "win_start").applyInPandasWithState(
-        _holt_fn(window_sec, alpha_milli, beta_milli),
-        outputStructType=_HOLT_OUT_SCHEMA,
-        stateStructType=_HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _period_stream(
+        events, ts_col, group_col, window, period, watermark, _HOLT_OUT_SCHEMA,
+        lambda xs: _holt_fold(xs, alpha_milli, beta_milli),
     )
 
 
@@ -951,72 +875,30 @@ _HW_OUT_SCHEMA = (
     "trend_milli long, forecast_milli long, season_amp_milli long, "
     "max_resid_milli long, is_final boolean"
 )
-_HW_STATE_SCHEMA = _HOLT_STATE_SCHEMA
 
 
-def _hw_fold(xs, a: int, b: int, g: int, p: int):
+def _hw_fold(xs, a: int, b: int, g: int, p: int) -> dict[str, int]:
     """The batch recurrence (plans/analytics.py holt_winters_forecast):
     level + trend + p-slot additive season, truncate-toward-zero
     integer milli division — slot for the k-th ordered period is
     k mod p, zero-season init, identical to the Catalyst fold."""
-
-    def tdiv(y, d):
-        q = abs(y) // d
-        return q if y >= 0 else -q
-
     l, t, r, i = xs[0] * 1000, 0, 0, 0
     s = [0] * p
     for x in xs[1:]:
         i += 1
         sl = i % p
         resid = abs(x * 1000 - (l + t + s[sl]))
-        ln = tdiv(a * (x * 1000 - s[sl]) + (1000 - a) * (l + t), 1000)
-        tn = tdiv(b * (ln - l) + (1000 - b) * t, 1000)
-        s[sl] = tdiv(g * (x * 1000 - ln) + (1000 - g) * s[sl], 1000)
+        ln = _tdiv(a * (x * 1000 - s[sl]) + (1000 - a) * (l + t), 1000)
+        tn = _tdiv(b * (ln - l) + (1000 - b) * t, 1000)
+        s[sl] = _tdiv(g * (x * 1000 - ln) + (1000 - g) * s[sl], 1000)
         l, t, r = ln, tn, max(r, resid)
-    nxt = s[(i + 1) % p]
-    return l, t, l + t + nxt, max(s) - min(s), r
-
-
-def _hw_fn(window_sec: int, a: int, b: int, g: int, p: int):
-    def emit(grp, win_start, per_counts: dict, final):
-        xs = [per_counts[q] for q in sorted(per_counts)]
-        l, t, fc, amp, r = _hw_fold(xs, a, b, g, p)
-        return pd.DataFrame(
-            {
-                "grp": [grp],
-                "win_start": [win_start],
-                "n_periods": [len(xs)],
-                "level_milli": [l],
-                "trend_milli": [t],
-                "forecast_milli": [fc],
-                "season_amp_milli": [amp],
-                "max_resid_milli": [r],
-                "is_final": [final],
-            }
-        )
-
-    def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        grp, win_start = key
-        if state.hasTimedOut:
-            periods, counts, _ = state.get
-            yield emit(grp, win_start, dict(zip(periods, counts)), True)
-            state.remove()
-            return
-        pc: dict = dict(zip(*state.get[:2])) if state.exists else {}
-        for pdf in pdfs:
-            for q in pdf["_p"]:
-                q = int(q)
-                pc[q] = pc.get(q, 0) + 1
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        ps = sorted(pc)
-        state.update((ps, [pc[q] for q in ps], win_end_ms))
-        state.setTimeoutTimestamp(win_end_ms)
-        yield emit(grp, win_start, pc, False)
-
-    return fn
+    return {
+        "level_milli": l,
+        "trend_milli": t,
+        "forecast_milli": l + t + s[(i + 1) % p],
+        "season_amp_milli": max(s) - min(s),
+        "max_resid_milli": r,
+    }
 
 
 def hw_window_stream(
@@ -1045,24 +927,9 @@ def hw_window_stream(
     arrival order, chunking, or partitioning. State per open (group,
     window) is the same windows/period counters — the p seasonal
     slots live only inside the emit fold, never in state."""
-    from pyspark.sql import functions as F
-
-    window_sec = _duration_seconds(window)
-    period_sec = _duration_seconds(period)
-    keyed = events.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.window(ts_col, window).start.alias("win_start"),
-        (
-            (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(F.col(ts_col)) % period_sec)
-            * 1000
-        ).alias("_p"),
-    ).withWatermark("win_start", watermark)
-    return keyed.groupBy("grp", "win_start").applyInPandasWithState(
-        _hw_fn(window_sec, alpha_milli, beta_milli, gamma_milli, season),
-        outputStructType=_HW_OUT_SCHEMA,
-        stateStructType=_HW_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _period_stream(
+        events, ts_col, group_col, window, period, watermark, _HW_OUT_SCHEMA,
+        lambda xs: _hw_fold(xs, alpha_milli, beta_milli, gamma_milli, season),
     )
 
 
@@ -1071,10 +938,9 @@ _CUSUM_OUT_SCHEMA = (
     "max_cusum_milli long, first_alarm_period long, "
     "n_alarm_periods long, is_final boolean"
 )
-_CUSUM_STATE_SCHEMA = _HOLT_STATE_SCHEMA
 
 
-def _cusum_fold(xs, b: int):
+def _cusum_fold(xs, b: int) -> dict[str, int]:
     """The batch recurrence (plans/analytics.py cusum_shift):
     two-sided Page CUSUM, baseline mu from the first b ordered
     periods, slack mu div 20, threshold mu div 2 — truncating
@@ -1090,47 +956,12 @@ def _cusum_fold(xs, b: int):
             n_alarms += 1
             if first == 0:
                 first = i
-    return mu, mx, first, n_alarms
-
-
-def _cusum_fn(window_sec: int, baseline_periods: int):
-    def emit(grp, win_start, per_counts: dict, final):
-        xs = [per_counts[q] for q in sorted(per_counts)]
-        mu, mx, first, n_alarms = _cusum_fold(xs, baseline_periods)
-        return pd.DataFrame(
-            {
-                "grp": [grp],
-                "win_start": [win_start],
-                "n_periods": [len(xs)],
-                "mu_milli": [mu],
-                "max_cusum_milli": [mx],
-                "first_alarm_period": [first],
-                "n_alarm_periods": [n_alarms],
-                "is_final": [final],
-            }
-        )
-
-    def fn(
-        key: Tuple[Any, Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        grp, win_start = key
-        if state.hasTimedOut:
-            periods, counts, _ = state.get
-            yield emit(grp, win_start, dict(zip(periods, counts)), True)
-            state.remove()
-            return
-        pc: dict = dict(zip(*state.get[:2])) if state.exists else {}
-        for pdf in pdfs:
-            for q in pdf["_p"]:
-                q = int(q)
-                pc[q] = pc.get(q, 0) + 1
-        win_end_ms = int(win_start.value // 1_000_000) + window_sec * 1000
-        ps = sorted(pc)
-        state.update((ps, [pc[q] for q in ps], win_end_ms))
-        state.setTimeoutTimestamp(win_end_ms)
-        yield emit(grp, win_start, pc, False)
-
-    return fn
+    return {
+        "mu_milli": mu,
+        "max_cusum_milli": mx,
+        "first_alarm_period": first,
+        "n_alarm_periods": n_alarms,
+    }
 
 
 def cusum_window_stream(
@@ -1156,24 +987,9 @@ def cusum_window_stream(
     order, chunking, or partitioning. State is the same bounded
     windows/period counters; the CUSUM trajectory lives only inside
     the emit fold, never in state."""
-    from pyspark.sql import functions as F
-
-    window_sec = _duration_seconds(window)
-    period_sec = _duration_seconds(period)
-    keyed = events.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.window(ts_col, window).start.alias("win_start"),
-        (
-            (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(F.col(ts_col)) % period_sec)
-            * 1000
-        ).alias("_p"),
-    ).withWatermark("win_start", watermark)
-    return keyed.groupBy("grp", "win_start").applyInPandasWithState(
-        _cusum_fn(window_sec, baseline_periods),
-        outputStructType=_CUSUM_OUT_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _period_stream(
+        events, ts_col, group_col, window, period, watermark, _CUSUM_OUT_SCHEMA,
+        lambda xs: _cusum_fold(xs, baseline_periods),
     )
 
 
@@ -1258,10 +1074,4 @@ def hampel_stream(
         state.update((vals,))
         yield out
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=_HAMPEL_OUT_SCHEMA,
-        stateStructType=_HAMPEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_state(events, [key_col], fn, _HAMPEL_OUT_SCHEMA, _HAMPEL_STATE_SCHEMA)

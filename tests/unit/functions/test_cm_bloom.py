@@ -335,3 +335,27 @@ def test_stored_sketch_roundtrip_drives_the_algebra(spark, tmp_path):
     assert {r.pos for r in spark.read.parquet(pb).collect()} == {
         r.pos for r in bb.collect()
     }
+
+
+def test_position_and_cell_hashes_match_replica(spark):
+    """bloom_positions / cm_cells — the one hash every build, probe
+    and stream twin shares — equal the md5 replica for any value type,
+    and a CM cell is the Bloom position salted by its row."""
+    from logprep_spark.functions.sketch import bloom_positions, cm_cells
+
+    df = spark.createDataFrame([("a",), ("user7",), ("",)], ["v"])
+    m, j = 97, 4
+    got = {
+        r.v: (list(r.p), list(r.c))
+        for r in df.select(
+            "v",
+            F.array(*bloom_positions(F.col("v"), m, j)).alias("p"),
+            F.array(*cm_cells(F.col("v"), j, m)).alias("c"),
+        ).collect()
+    }
+    for v, (pos, cells) in got.items():
+        assert pos == [_h60(f"{i}:{v}") % m for i in range(j)]
+        assert cells == pos
+    # a non-string column hashes its string form
+    n = spark.range(3).select(F.array(*bloom_positions(F.col("id"), m, 1)).alias("p"))
+    assert [r.p[0] for r in n.collect()] == [_h60(f"0:{i}") % m for i in range(3)]

@@ -49,6 +49,33 @@ def test_shingles(spark):
     assert sh == ["a b c", "b c d"]
 
 
+def test_token_windows_match_python_windows(spark):
+    """text.token_windows, the one k-token window expression: every
+    k-window in position order, one short window below k tokens (an
+    empty one for no tokens), and ``each`` maps windows in place."""
+    import hashlib
+
+    texts = ["a b c d e", "a  b", "", "x y z"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string").select(
+        "text", text.tokens(F.col("text")).alias("toks")
+    )
+    for k in (1, 2, 3):
+        out = df.select(
+            "text",
+            text.token_windows("toks", k).alias("w"),
+            text.token_windows(F.col("toks"), k, each=dedup.h60).alias("h"),
+        ).collect()
+        for r in out:
+            toks = r.text.split()
+            want = [
+                " ".join(toks[i : i + k]) for i in range(max(len(toks) - k + 1, 1))
+            ]
+            assert r.w == want
+            assert r.h == [
+                int(hashlib.md5(w.encode()).hexdigest()[:15], 16) for w in want
+            ]
+
+
 def test_minhash_lsh_finds_near_dups(spark):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")

@@ -249,6 +249,39 @@ def test_cluster_steps_honor_id_col(spark):
     assert sorted(r.page_id for r in alone.collect()) == [1, 4]
 
 
+def test_dedup_steps_take_options_and_honor_columns(spark):
+    """line_dedup and exact_dedup accept their options (the module
+    docstring's ``min_occurrences: 2``, ``id_col``) and keep a text
+    column not named ``text`` under its own name for later steps."""
+    df = spark.createDataFrame(
+        [(1, "keep me\nboiler line", "s1"),
+         (2, "boiler line\nunique two", "s2"),
+         (3, "unique three\nboiler line", "s3"),
+         (4, "unique  two", "s4")],  # exact dup of 2 once normalized
+        ["page_id", "body", "source"],
+    )
+    steps = [
+        {"op": "line_dedup", "min_occurrences": 2, "id_col": "page_id"},
+        {"op": "exact_dedup", "id_col": "page_id"},
+        {"op": "token_count"},
+    ]
+    out = CorpusPipeline(steps, text_col="body").transform(df)
+    assert sorted(out.columns) == ["body", "n_tokens", "page_id", "source"]
+    rows = {r.page_id: r for r in out.collect()}
+    assert sorted(rows) == [1, 2, 3]
+    assert rows[1].body == "keep me\nboiler line" and rows[1].source == "s1"
+    assert rows[2].body == "unique two" and rows[2].n_tokens == 2
+    assert rows[3].body == "unique three" and rows[3].source == "s3"
+
+    steps[0]["min_occurrences"] = 4  # the line occurs 3 times: kept
+    rows = {
+        r.page_id: r
+        for r in CorpusPipeline(steps, text_col="body").transform(df).collect()
+    }
+    assert sorted(rows) == [1, 2, 3, 4]
+    assert rows[2].body == "boiler line\nunique two"
+
+
 def _count_dup_clusters(monkeypatch) -> list:
     from logprep_spark.functions import dedup as dd
 

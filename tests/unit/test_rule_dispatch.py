@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from logprep_spark.operators import Labeler, PreDetector
 from logprep_spark.operators.dispatch import (
     COND_COL,
-    matched_ids,
     stage_conditions,
     transform_once,
 )
@@ -83,16 +82,6 @@ def test_stage_conditions_one_flat_projection(spark):
     assert staged._jdf.queryExecution().analyzed().toString().count(
         "Project"
     ) <= 2
-
-
-def test_matched_ids_compact(spark):
-    proc = Labeler(rules=_label_rules(6))
-    staged = stage_conditions(proc, _events(spark))
-    out = staged.select(
-        "event_id", matched_ids(6).alias("m"), F.col(COND_COL).alias("c")
-    ).collect()
-    for r in out:
-        assert r["m"] == [i for i, c in enumerate(r["c"]) if c]
 
 
 def test_labeler_bulk_equals_sequential(spark):
