@@ -354,7 +354,6 @@ def _step_decontaminate(
         words32[r["pos"] // 32] |= 1 << (r["pos"] % 32)
     bm = F.array(*[F.lit(w).cast("long") for w in words32])
     pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-    wins = tx.token_windows(tx.tokens(F.col(text_col)), k)
 
     def bit_set(pos):
         word = F.element_at(
@@ -363,14 +362,18 @@ def _step_decontaminate(
         mask = F.element_at(pow2, F.pmod(pos, 32).cast("int") + 1)
         return word.bitwiseAND(mask) != 0
 
-    import functools
-    import operator
-
+    # Lambdas get no common-subexpression elimination, and a staged
+    # token column is inlined back into the predicate when the filter
+    # is pushed through its projection. So the token array is bound
+    # ONCE per row as the lambda variable ``toks`` of a one-element
+    # exists() (split once, not once per window), each window is
+    # hashed once into an array, and each Bloom position is computed
+    # once into an array that forall() probes.
     hit = F.exists(
-        wins,
-        lambda w: functools.reduce(
-            operator.and_,
-            [bit_set(pos) for pos in sk.bloom_positions(dd.h60(w), m, j)],
+        F.array(tx.tokens(F.col(text_col))),
+        lambda toks: F.exists(
+            tx.token_windows(toks, k, dd.h60),
+            lambda h: F.forall(F.array(*sk.bloom_positions(h, m, j)), bit_set),
         ),
     )
     return df.filter(~hit)

@@ -176,12 +176,14 @@ class PipelineConfig:
             name: _create_connector({name: cfg}, _OUTPUTS, "output")
             for name, cfg in config.get("output", {}).items()
         }
-        # `rule_dispatch: true` — the reference's rule-tree posture
-        # (its DEFAULT engine; sequential evaluation is its
-        # _bypass_rule_tree opt-out) for config-driven pipelines with
-        # big rule corpora: bulk/match-once routing per processor
-        # (operators/dispatch.py; the sequential chain's pushdown
-        # blowup is measured in PLANS/rule_dispatch_probe.md)
+        # Every processor already matches its rules once (bulk or
+        # transform_once) wherever that provably equals the per-rule
+        # chain: two or more rules, a declared write set and no filter
+        # reading it (operators/base.py Pipeline). `rule_dispatch:
+        # true` only extends match-once to the rest — self-reading
+        # processors and undeclared write sets — i.e. the reference's
+        # rule-tree semantics, where filters see the processor-entry
+        # state (operators/dispatch.py).
         self.pipeline = Pipeline(
             self.processors, dispatch=bool(config.get("rule_dispatch", False))
         )

@@ -15,7 +15,8 @@ processors push down to the parquet scan.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from functools import partial
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -93,6 +94,13 @@ class Processor:
     def apply_rule(self, df: DataFrame, cond: Column, cfg: dict) -> DataFrame:
         raise NotImplementedError
 
+    def written_roots(self) -> list[str] | None:
+        """Dotted roots the rules write or delete — ``tags`` too for a
+        family that calls :meth:`tag_failure` — or ``None`` when the
+        family does not declare them. :class:`Pipeline` matches a
+        multi-rule processor once only when this is declared."""
+        return None
+
     # --- shared write helpers -------------------------------------------
 
     @staticmethod
@@ -150,39 +158,54 @@ class Pipeline:
     Catalyst fuses them into a single projection, so N processors
     cost one pass over the data regardless of N.
 
-    ``dispatch=True`` routes each processor through its many-rules
-    dispatch path (operators/dispatch.py — the reference
-    framework/rule_tree analog, which is the reference's DEFAULT;
-    per-rule sequential evaluation is its ``_bypass_rule_tree``
-    opt-out): a family bulk transform when the processor ships one
-    (labeler), else the generic match-once ``transform_once``.
-    Mandatory for big same-target rule corpora — the sequential
-    chain's predicate-pushdown blowup is measured in
-    PLANS/rule_dispatch_probe.md. Scope: dispatch matching sees the
-    processor-entry state (exactly the reference rule-tree
-    semantics), so it diverges from the sequential path only when a
-    rule's filter reads a field the SAME processor writes.
+    Rule path per processor. Match-once (operators/dispatch.py, the
+    reference framework/rule_tree analog and the reference's default)
+    compiles every rule's filter against the processor-entry state and
+    applies the matching rules in order: the family bulk transform when
+    the processor ships one (``transform_bulk``, the labeler's one-write
+    union), else the generic ``transform_once``. It is the default
+    wherever it provably equals the per-rule chain, that is when
+
+    * the processor keeps ``Processor.transform`` and
+      ``Processor.condition`` (Deleter, Dropper, PreDetector and
+      TemplateReplacer run their own ``transform``);
+    * it has two or more rules (one rule is already match-once: the
+      chain stages its condition before the write);
+    * it declares the roots its rules write (``written_roots``) and no
+      rule filter reads a field at, above or below one of them
+      (``dispatch.reads_own_writes``).
+
+    Every other processor runs the per-rule chain. ``dispatch=True``
+    (the config's ``rule_dispatch: true``) asks for the reference's
+    rule-tree semantics everywhere: self-reading processors and those
+    with an undeclared write set then match once as well, so a rule's
+    filter sees the processor-entry state, not an earlier rule's write.
     """
 
     def __init__(self, processors: list[Processor], dispatch: bool = False):
         self.processors = processors
         self.dispatch = dispatch
 
+    def _rule_path(self, proc: Processor) -> Callable[[DataFrame], DataFrame]:
+        """The transform ``proc`` runs in this pipeline (see the class
+        docstring)."""
+        from logprep_spark.operators import dispatch as dsp
+
+        cls = type(proc)
+        if (
+            len(proc.rules) < 2
+            or cls.transform is not Processor.transform
+            or cls.condition is not Processor.condition
+        ):
+            return proc.transform
+        if not self.dispatch and dsp.reads_own_writes(proc) is not False:
+            return proc.transform
+        bulk = getattr(proc, "transform_bulk", None)
+        return bulk if bulk is not None else partial(dsp.transform_once, proc)
+
     def transform(self, df: DataFrame) -> DataFrame:
         for proc in self.processors:
-            if self.dispatch:
-                bulk = getattr(proc, "transform_bulk", None)
-                if bulk is not None:
-                    df = bulk(df)
-                    continue
-                if type(proc).apply_rule is not Processor.apply_rule:
-                    from logprep_spark.operators.dispatch import (
-                        transform_once,
-                    )
-
-                    df = transform_once(proc, df)
-                    continue
-            df = proc.transform(df)
+            df = self._rule_path(proc)(df)
         return df
 
     @staticmethod

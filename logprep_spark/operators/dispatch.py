@@ -45,8 +45,10 @@ The cure is structural, and it is exactly the rule tree's semantics:
 Semantics scope, stated: match-once equals the sequential path
 whenever no rule's filter reads a field the SAME processor writes —
 the reference accepts the identical divergence between its rule-tree
-path and its ``_bypass_rule_tree`` sequential path. The labeler and
-pre_detector families never self-read, so their bulk paths are exact.
+path and its ``_bypass_rule_tree`` sequential path.
+:func:`reads_own_writes` decides that from the parsed filters and the
+family's declared write roots; ``Pipeline`` matches once by default
+exactly where it answers False.
 
 Scale: the staged projection is O(N) flat expressions inside
 whole-stage codegen (Spark splits generated code across methods —
@@ -92,6 +94,50 @@ def _expr_memo_key(tag: str, rules, df: DataFrame):
         for r in rules
     )
     return _EXPR_MEMO.key(df.sparkSession, tag, fp, df.schema.json())
+
+
+def _filter_keys(node):
+    """Every field key a parsed filter reads; ``None`` for a keyless
+    node other than ``Always`` (an unknown read)."""
+    from logprep_spark.filters import ast as fast
+
+    if isinstance(node, fast.Always):
+        return
+    if isinstance(node, fast.Not):
+        yield from _filter_keys(node.child)
+    elif isinstance(node, (fast.And, fast.Or)):
+        for child in node.children:
+            yield from _filter_keys(child)
+    else:
+        yield getattr(node, "key", None)
+
+
+def reads_own_writes(processor) -> bool | None:
+    """Whether some rule filter of ``processor`` reads a field the
+    processor writes: a key equal to a declared write root, above it
+    or below it, or a keyless node. ``None`` when the write set is not
+    declared or a filter does not parse. Where this is False,
+    match-once and the per-rule chain see the same match state, so
+    :func:`transform_once` and a family bulk path equal
+    ``Processor.transform``."""
+    from logprep_spark.filters.parser import FilterParseError, parse_filter
+
+    roots = processor.written_roots()
+    if roots is None:
+        return None
+    roots = [fld.split_path(r) for r in roots]
+    for rule in processor.rules:
+        try:
+            node = parse_filter(rule.filter, rule.regex_fields, rule.sigma_fields)
+        except FilterParseError:
+            return None
+        for key in _filter_keys(node):
+            if key is None:
+                return True
+            parts = fld.split_path(key)
+            if any(parts[: len(r)] == r or r[: len(parts)] == parts for r in roots):
+                return True
+    return False
 
 
 def _plan_hoist(rules, df: DataFrame):
@@ -378,7 +424,9 @@ def labeler_bulk(labeler, df: DataFrame) -> DataFrame:
     else:
         any_add = _balanced_or([_cond(i) for i in val_idx])
     empty = F.array().cast("array<string>")
-    for cat, idx_map in sorted(cats.items()):
+    # categories in first-write order (rule order, then each rule's
+    # own order): the order the sequential chain adds struct fields
+    for cat, idx_map in cats.items():
         # Matched values are collected as ONE separator-joined string
         # (``concat_ws`` skips null children natively, inside
         # whole-stage codegen, zero per-rule allocations) and split

@@ -19,14 +19,23 @@ from logprep_spark.operators.base import Processor
 class KeyChecker(Processor):
     rule_type = "key_checker"
 
+    def written_roots(self) -> list[str]:
+        return [rule.config["target_field"] for rule in self.rules]
+
     def apply_rule(self, df: DataFrame, cond, cfg: dict) -> DataFrame:
+        # the keys are config constants, so they sort here and the
+        # missing ones gather in that order as one NUL-joined
+        # concat_ws (which skips the present keys' nulls) split once:
+        # code-generated, where array_compact / array_sort are
+        # higher-order functions that run interpreted. None missing
+        # -> '' -> null, as before.
         missing_exprs = []
-        for key in cfg["source_fields"]:
+        for key in sorted(cfg["source_fields"]):
             col = fld.get_field(df, key)
             if col is None:
                 missing_exprs.append(F.lit(key))
             else:
                 missing_exprs.append(F.when(col.isNull(), F.lit(key)))
-        missing = F.array_compact(F.array(*missing_exprs)) if missing_exprs else F.array()
-        value = F.when(F.size(missing) > 0, F.array_sort(missing))
+        joined = F.concat_ws("\x00", *missing_exprs)
+        value = F.split(F.nullif(joined, F.lit("")), "\x00")
         return self.set_when(df, cfg["target_field"], cond, value)

@@ -215,18 +215,29 @@ class Labeler(Processor):
         else:
             self.schema = None
 
+    def written_roots(self) -> list[str]:
+        return ["label"]
+
     def transform_bulk(self, df: DataFrame) -> DataFrame:
         """All rules in ONE label write — the many-rules dispatch path
         (operators/dispatch.py; reference framework/rule_tree: match
-        once, apply flat). Use for rule corpora beyond a handful: the
-        sequential ``transform`` chain is safe to build but a
-        downstream filter on ``label`` pushed through it compounds
-        exponentially (measured: unrunnable at 8 rules —
+        once, apply flat). The sequential ``transform`` chain is safe
+        to build but a downstream filter on ``label`` pushed through it
+        compounds exponentially (measured: unrunnable at 8 rules —
         tools/rule_scale_probe.py). Bit-identical to ``transform``
         whenever no rule filter reads ``label.*`` (pytest witness in
-        tests/unit/test_rule_dispatch.py)."""
-        from logprep_spark.operators.dispatch import labeler_bulk
+        tests/unit/test_rule_dispatch.py): the one-write union is
+        distinct, while the chain's first write keeps a rule's value
+        list as given, so a rule with an empty or repeated value list
+        takes the generic match-once path instead."""
+        from logprep_spark.operators.dispatch import labeler_bulk, transform_once
 
+        if any(
+            not values or len(set(values)) < len(values)
+            for rule in self.rules
+            for values in rule.config.get("label", {}).values()
+        ):
+            return transform_once(self, df)
         return labeler_bulk(self, df)
 
     def apply_rule(self, df: DataFrame, cond, cfg: dict) -> DataFrame:
@@ -237,8 +248,16 @@ class Labeler(Processor):
             if existing is None:
                 value = F.when(cond, new)
             else:
+                # sorted distinct union, a null (from the input) last:
+                # array_sort would give that, but it runs interpreted
+                # (CodegenFallback) and drops the chain out of codegen;
+                # sort_array is code-generated but sorts nulls first,
+                # so sort the distinct non-null values and let
+                # array_union append the null
+                merged = F.concat(F.coalesce(existing, F.array()), new)
+                nulls = F.array(F.lit(None).cast("string"))
                 value = F.when(
-                    cond, F.array_sort(F.array_distinct(F.concat(F.coalesce(existing, F.array()), new)))
+                    cond, F.array_union(F.sort_array(F.array_except(merged, nulls)), merged)
                 ).otherwise(existing)
             df = fld.set_field(df, path, value)
         return df

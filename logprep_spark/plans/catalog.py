@@ -3830,11 +3830,15 @@ def dedup_exact(spark, sf_dir):
     return dd.exact_dup_groups(docs)
 
 
-def _sql_minhash_bands(source: str = "documents") -> str:
+def _sql_minhash_bands(source: str = "documents", materialize: bool = False) -> str:
     """CTE chain doc -> shingles -> 16-perm signature -> 4 LSH bands,
     mirroring functions/dedup.py minhash_bands exactly. ``source`` is
     the table/CTE the docs come from (a sampling CTE for eval
-    queries)."""
+    queries). ``materialize`` marks the multiply-referenced ``sh``,
+    ``sigs`` and ``bands`` CTEs ``AS MATERIALIZED``: DuckDB otherwise
+    inlines them at every reference, so the shingle split runs three
+    times and the signatures four."""
+    mat = "MATERIALIZED " if materialize else ""
     sig_members = ", ".join(
         f"list_min(list_transform(hb, h -> ({dd.PERM_A[i]} * h + {dd.PERM_B[i]}) "
         f"% {dd.MERSENNE_P}))"
@@ -3850,13 +3854,13 @@ def _sql_minhash_bands(source: str = "documents") -> str:
         )
     bands_union = " UNION ALL ".join(band_selects)
     return f"""
-    sh AS (
+    sh AS {mat}(
         SELECT doc_id, {_sql_shingles()} AS shingles FROM {source}
-    ), sigs AS (
+    ), sigs AS {mat}(
         SELECT doc_id, [{sig_members}] AS sig
         FROM (SELECT doc_id, list_transform(shingles,
                   s -> {_sql_h60('s')} % {dd.MERSENNE_P}) AS hb FROM sh)
-    ), bands AS (
+    ), bands AS {mat}(
         {bands_union}
     ), pairs AS (
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -3972,13 +3976,13 @@ def dedup_minhash_estimate(spark, sf_dir):
 @register(
     "dedup_clusters",
     f"""
-    WITH RECURSIVE {_sql_minhash_bands()}, verified AS (
+    WITH RECURSIVE {_sql_minhash_bands(materialize=True)}, verified AS MATERIALIZED (
         SELECT id_a, id_b
         FROM pairs
         JOIN sh sa ON sa.doc_id = id_a
         JOIN sh sb ON sb.doc_id = id_b
         WHERE {_SQL_JACCARD} >= 0.7
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM verified
         UNION
         SELECT id_b, id_a FROM verified
@@ -4437,13 +4441,13 @@ def ann_topk_lsh(spark, sf_dir):
 @register(
     "pairs_contrastive_mine",
     f"""
-    WITH RECURSIVE {_sql_minhash_bands()}, verified AS (
+    WITH RECURSIVE {_sql_minhash_bands(materialize=True)}, verified AS MATERIALIZED (
         SELECT id_a, id_b
         FROM pairs
         JOIN sh sa ON sa.doc_id = id_a
         JOIN sh sb ON sb.doc_id = id_b
         WHERE {_SQL_JACCARD} >= 0.7
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT id_a AS src, id_b AS dst FROM verified
         UNION
         SELECT id_b, id_a FROM verified
@@ -4451,7 +4455,7 @@ def ann_topk_lsh(spark, sf_dir):
         SELECT src, src FROM edges
         UNION
         SELECT e.src, w.label FROM edges e JOIN walk w ON w.id = e.dst
-    ), cl AS (
+    ), cl AS MATERIALIZED (
         SELECT id AS doc_id, min(label) AS cluster_id FROM walk GROUP BY id
     ), anchors AS (
         SELECT DISTINCT id_a AS a FROM verified
@@ -11917,27 +11921,27 @@ _SIMHASH_RECALL_ROW = """
 @register(
     "dedup_simhash_recall",
     f"""
-    WITH docs_sample AS (
+    WITH docs_sample AS MATERIALIZED (
         SELECT doc_id, text FROM documents
         WHERE {_sql_h60("'shr:' || doc_id::varchar")} % 2 = 0
-    ), shn AS (
+    ), shn AS MATERIALIZED (
         SELECT doc_id, {_sql_shingles('text', 3)} AS shingles FROM docs_sample
-    ), truth AS (
+    ), truth AS MATERIALIZED (
         SELECT sa.doc_id AS id_a, sb.doc_id AS id_b
         FROM shn sa JOIN shn sb ON sa.doc_id < sb.doc_id
         WHERE round(len(list_intersect(sa.shingles, sb.shingles))
               / greatest(len(list_distinct(sa.shingles || sb.shingles)), 1), 6)
               >= 0.5
-    ), hs AS (
+    ), hs AS MATERIALIZED (
         SELECT doc_id,
                list_transform(list_distinct({_sql_words()}),
                               t -> {_sql_h60('t')}) AS hashes
         FROM docs_sample
-    ), sh AS (
+    ), sh AS MATERIALIZED (
         SELECT doc_id, {_sql_simhash_terms('hashes')} AS sh FROM hs
-    ), bands AS (
+    ), bands AS MATERIALIZED (
 {_SIMHASH_BANDS_SQL}
-    ), cand AS (
+    ), cand AS MATERIALIZED (
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
                bit_count(xor(a.sh, b.sh)) AS ham
         FROM bands a JOIN bands b USING (band_id, key)
@@ -19713,18 +19717,20 @@ def ab_ks_test(spark, sf_dir):
 
 
 def _sql_hits_rounds(iters: int) -> str:
+    # each raw-score CTE is read twice (scores and their max): without
+    # MATERIALIZED DuckDB re-runs every earlier round at each reference
     rounds = []
     prev_h = "h0"
     for i in range(1, iters + 1):
         rounds.append(
-            f"""ar{i} AS (
+            f"""ar{i} AS MATERIALIZED (
         SELECT e.dst AS node, CAST(sum(h.h) AS BIGINT) AS raw
         FROM {prev_h} h JOIN edges e ON h.node = e.src GROUP BY e.dst
     ), a{i} AS (
         SELECT node, CAST(1000 * raw // (SELECT max(raw) FROM ar{i})
                           AS BIGINT) AS a
         FROM ar{i}
-    ), hr{i} AS (
+    ), hr{i} AS MATERIALIZED (
         SELECT e.src AS node, CAST(sum(a.a) AS BIGINT) AS raw
         FROM a{i} a JOIN edges e ON a.node = e.dst GROUP BY e.src
     ), h{i} AS (
@@ -19743,7 +19749,7 @@ def _sql_hits_rounds(iters: int) -> str:
     WITH pairs AS (
         SELECT DISTINCT o_custkey * 2 AS cust, l_suppkey * 2 + 1 AS supp
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT cust AS src, supp AS dst FROM pairs
     ), h0 AS (
         SELECT DISTINCT src AS node, CAST(1000 AS BIGINT) AS h FROM edges

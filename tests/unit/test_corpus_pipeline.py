@@ -639,6 +639,66 @@ def test_decontaminate_step_batch_stream_parity(spark, tmp_path):
     assert got == [2]
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text inside every ``lambdafunction(...)`` of a plan string."""
+    out = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        i = start + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[start + len("lambdafunction("):i - 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return out
+
+
+def test_decontaminate_stream_gate_splits_once(spark, tmp_path):
+    """The streaming decontaminate gate tokenizes each doc ONCE: its
+    optimized plan over a parquet readStream has no ``split(`` inside
+    any lambda (a lambda gets no common-subexpression elimination, so
+    a split there re-runs once per window)."""
+    from logprep_spark.functions import dedup as dd
+    from logprep_spark.functions import sketch as sk
+
+    bench = spark.createDataFrame(
+        [(100, "alpha beta gamma delta " * 5)], ["doc_id", "text"]
+    )
+    bloom_path = str(tmp_path / "bloom")
+    sk.bloom_bits(
+        dd.window_hashes(bench, 4).select("window_hash").distinct(),
+        "window_hash", m=4096, j=3,
+    ).write.parquet(bloom_path)
+    docs_path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta echoed verbatim"),
+         (2, "entirely unrelated clean document text")],
+        "doc_id long, text string",
+    ).write.parquet(docs_path)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(docs_path)
+    p = CorpusPipeline(
+        [{"op": "decontaminate", "path": bloom_path, "k": 4, "m": 4096}]
+    )
+    q = (
+        p.transform(stream)
+        .writeStream.format("memory")
+        .queryName("decontam_split_once")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(60)
+    plan = q._jsq.explainInternal(True)
+    optimized = plan[plan.index("== Optimized Logical Plan =="):plan.index("== Physical Plan ==")]
+    bodies = _lambda_bodies(optimized)
+    assert bodies and "split(" in optimized
+    assert not [b for b in bodies if "split(" in b]
+    got = [r["doc_id"] for r in
+           spark.sql("SELECT doc_id FROM decontam_split_once").collect()]
+    assert got == [2]
+
+
 def test_incremental_apply_only_yaml_parity(spark, sf_dir, tmp_path):
     """The X30 factory ships the APPLY-ONLY incremental path (r12
     verdict ask #7): the gated pipeline_pretrain_incremental row

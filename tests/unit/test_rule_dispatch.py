@@ -16,6 +16,7 @@ and 8 rules never finished. These tests pin the cure:
   table, vs one scan PER RULE in the naive union.
 """
 
+import re
 import time
 
 from pyspark.sql import functions as F
@@ -379,3 +380,241 @@ def test_hoist_refuses_mixed_node_types(spark):
     assert _collect_sorted(seq) == _collect_sorted(bulk)
     r0 = bulk.where("event_id = 0").first()["label"]["action"]
     assert set(r0) == {"S5", "I5"}
+
+
+# --- match-once by default (Pipeline routing) -----------------------
+
+
+def _batch_events(spark, n=300):
+    rows = [
+        (
+            i,
+            EVENT_TYPES[i % len(EVENT_TYPES)],
+            (i * 13) % 1000,
+            ("debug", "info", "warn", "error")[i % 4],
+            None if i % 7 == 0 else f"u{i % 11}",
+            ("2024-06-01T10:00:00Z", "1717236000", "not a time", None)[(i // 2) % 4],
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "event_id long, event_type string, user_id long, level string,"
+        " user_name string, when string",
+    )
+
+
+def _batch_processors():
+    """An events_batch-style chain: the 20-rule labeler of the
+    benchmark shape, multi-rule key_checker and concatenator configs,
+    and single-rule processors around them."""
+    from logprep_spark.operators import (
+        Concatenator,
+        Deleter,
+        GenericAdder,
+        KeyChecker,
+        Timestamper,
+    )
+
+    return [
+        GenericAdder([{"filter": "level", "generic_adder": {"add": {"seen": "yes"}}}]),
+        Timestamper([
+            {"filter": "when", "timestamper": {"source_fields": ["when"]}},
+            {"filter": "level:error", "timestamper": {
+                "source_fields": ["when"], "source_format": ["UNIX"],
+                "target_field": "when_unix"}},
+        ]),
+        Labeler(rules=_label_rules(20)),
+        KeyChecker([
+            {"filter": "level:error", "key_checker": {
+                "source_fields": ["user_name", "event_type", "not.there"],
+                "target_field": "missing"}},
+            {"filter": "level:warn", "key_checker": {
+                "source_fields": ["user_name", "absent"],
+                "target_field": "missing"}},
+        ]),
+        Concatenator([
+            {"filter": "event_type:click", "concatenator": {
+                "source_fields": ["level", "event_type"],
+                "target_field": "tag", "separator": "|"}},
+            {"filter": "user_id:[0 TO 500]", "concatenator": {
+                "source_fields": ["event_type", "user_id"],
+                "target_field": "tag", "separator": "#",
+                "overwrite_target": False}},
+        ]),
+        Deleter([{"filter": "level:debug", "deleter": {"delete": True}}]),
+    ]
+
+
+def test_pipeline_matches_once_exactly_by_default(spark):
+    """Every multi-rule processor of an events_batch-style chain takes
+    match-once by default (its filters read nothing it writes), and
+    the result equals the per-rule chain, processor by processor and
+    for the whole pipeline."""
+    from logprep_spark.operators.base import Pipeline
+
+    ev = _batch_events(spark)
+    procs = _batch_processors()
+    pipe = Pipeline(procs)
+    chained = ev
+    for proc in procs:
+        routed = pipe._rule_path(proc)
+        if len(proc.rules) > 1:
+            assert routed != proc.transform, type(proc).__name__
+            assert _collect_sorted(Pipeline([proc]).transform(ev)) == _collect_sorted(
+                proc.transform(ev)
+            ), type(proc).__name__
+        else:
+            assert routed == proc.transform
+        chained = proc.transform(chained)
+    out = pipe.transform(ev)
+    assert out.schema.simpleString() == chained.schema.simpleString()
+    assert _collect_sorted(out) == _collect_sorted(chained)
+    # the labeler wrote its 20 rules' labels in one projection
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert len(re.findall(r" AS label#", analyzed)) == 1
+
+
+def test_self_reading_labeler_keeps_the_chain(spark):
+    """Rule 2 filters on ``label.action``, which rule 1 writes: by
+    default the pipeline keeps the per-rule chain (rule 2 sees rule
+    1's write); ``dispatch=True`` asks for the rule-tree semantics
+    (rule 2 sees the processor-entry state) and differs."""
+    from logprep_spark.operators.base import Pipeline
+    from logprep_spark.operators.dispatch import reads_own_writes
+
+    rules = [
+        {"filter": "event_type:error", "labeler": {"label": {"action": ["SEED"]}}},
+        {"filter": "label.action:SEED", "labeler": {"label": {"action": ["CHAINED"]}}},
+    ]
+    ev = _events(spark, 30)
+    proc = Labeler(rules=rules)
+    assert reads_own_writes(proc) is True
+    assert Pipeline([proc])._rule_path(proc) == proc.transform
+    seq = proc.transform(ev)
+    default = Pipeline([Labeler(rules=rules)]).transform(ev)
+    assert _collect_sorted(default) == _collect_sorted(seq)
+    tree = Pipeline([Labeler(rules=rules)], dispatch=True).transform(ev)
+    assert _collect_sorted(tree) != _collect_sorted(seq)
+    errors = {
+        r["event_id"]: r["label"]["action"]
+        for r in tree.collect()
+        if r["event_type"] == "error"
+    }
+    assert errors and all(v == ["SEED"] for v in errors.values())
+    assert all(
+        r["label"]["action"] == ["CHAINED", "SEED"]
+        for r in default.collect()
+        if r["event_type"] == "error"
+    )
+
+
+def test_reads_own_writes_key_relations():
+    """A filter key at, above or below a written root is a read; a
+    sibling is not; an undeclared write set is unknown."""
+    from logprep_spark.operators import GenericAdder, KeyChecker, Timestamper
+    from logprep_spark.operators.dispatch import reads_own_writes
+
+    def kc(*filters):
+        return KeyChecker([
+            {"filter": f, "key_checker": {"source_fields": ["a"], "target_field": "out.missing"}}
+            for f in filters
+        ])
+
+    assert reads_own_writes(kc("*", "level:error AND NOT user.name:x")) is False
+    assert reads_own_writes(kc("*", "out.other:1")) is False
+    assert reads_own_writes(kc("*", "out.missing:x")) is True
+    assert reads_own_writes(kc("*", "out")) is True
+    assert reads_own_writes(kc("*", "out.missing.deep:1")) is True
+    stamp = Timestamper([
+        {"filter": "level:error", "timestamper": {"source_fields": ["when"]}},
+        {"filter": "tags:_timestamper_failure", "timestamper": {"source_fields": ["when"]}},
+    ])
+    assert reads_own_writes(stamp) is True  # tag_failure writes tags
+    adder = GenericAdder([
+        {"filter": "*", "generic_adder": {"add": {"x": "1"}}},
+        {"filter": "*", "generic_adder": {"add": {"y": "1"}}},
+    ])
+    assert reads_own_writes(adder) is None
+
+
+def test_labeler_bulk_keeps_chain_shape_for_odd_configs(spark):
+    """The chain's first write keeps a rule's value list as given and
+    adds struct fields in first-write order; the pipeline's bulk route
+    matches it for repeated, empty and out-of-order categories."""
+    from logprep_spark.operators.base import Pipeline
+
+    ev = _events(spark, 60)
+    for rules in (
+        [
+            {"filter": "event_type:click", "labeler": {"label": {"origin": ["O1"]}}},
+            {"filter": "user_id:[0 TO 500]", "labeler": {"label": {"action": ["B", "A"]}}},
+        ],
+        [
+            {"filter": "event_type:click", "labeler": {"label": {"action": ["X", "X"]}}},
+            {"filter": "event_type:view", "labeler": {"label": {"action": []}}},
+        ],
+    ):
+        seq = Labeler(rules=rules).transform(ev)
+        routed = Pipeline([Labeler(rules=rules)]).transform(ev)
+        assert routed.schema.simpleString() == seq.schema.simpleString()
+        assert _collect_sorted(routed) == _collect_sorted(seq)
+
+
+def test_labeler_union_sorts_null_last(spark):
+    """A null inside an existing label array stays last after the
+    sorted distinct union, on the per-rule chain and the bulk path."""
+    rules = [
+        {"filter": "event_type:click", "labeler": {"label": {"action": ["b", "a"]}}},
+        {"filter": "event_type:click", "labeler": {"label": {"action": ["c"]}}},
+    ]
+    ev = spark.createDataFrame(
+        [(1, "click", ["z", None, "a"]), (2, "view", ["z", None])],
+        "event_id long, event_type string, existing array<string>",
+    ).select(
+        "event_id", "event_type", F.struct(F.col("existing").alias("action")).alias("label")
+    )
+    want = {1: ["a", "b", "c", "z", None], 2: ["z", None]}
+    seq = Labeler(rules=rules).transform(ev)
+    assert {r["event_id"]: r["label"]["action"] for r in seq.collect()} == want
+    bulk = Labeler(rules=rules).transform_bulk(ev)
+    assert {r["event_id"]: r["label"]["action"] for r in bulk.collect()} == want
+    plan = seq._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_sort" not in plan and "sort_array" in plan
+
+
+def test_streaming_pipeline_writes_label_once(spark, tmp_path):
+    import json
+
+    from logprep_spark.streaming import StreamingPipeline
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "b0.jsonl").write_text(
+        json.dumps({"event_id": 1, "event_type": "click", "user_id": 7}) + "\n"
+    )
+    stream = spark.readStream.schema(
+        "event_id long, event_type string, user_id long"
+    ).json(str(d))
+    out = StreamingPipeline(None, [Labeler(rules=_label_rules(20))], None).transform(stream)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert len(re.findall(r" AS label#", analyzed)) == 1
+
+
+def test_deleter_pushes_its_filter_under_either_flag(spark, tmp_path):
+    """Deleter keeps its own pushdown-eligible ``transform`` whatever
+    ``dispatch`` says: the parquet scan gets the null-safe negation."""
+    from logprep_spark.operators import Deleter
+    from logprep_spark.operators.base import Pipeline
+
+    path = str(tmp_path / "ev")
+    spark.createDataFrame(
+        [(1, "debug"), (2, "info"), (3, None)], "event_id long, level string"
+    ).write.parquet(path)
+    pushed = "PushedFilters: [Or(IsNull(level),Not(EqualTo(level,debug)))]"
+    for flag in (False, True):
+        proc = Deleter([{"filter": "level:debug", "deleter": {"delete": True}}])
+        out = Pipeline([proc], dispatch=flag).transform(spark.read.parquet(path))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert pushed in plan, (flag, plan)
+        assert sorted(r["event_id"] for r in out.collect()) == [2, 3]
