@@ -176,10 +176,10 @@ class PipelineConfig:
             name: _create_connector({name: cfg}, _OUTPUTS, "output")
             for name, cfg in config.get("output", {}).items()
         }
-        # Every processor already matches its rules once (bulk or
-        # transform_once) wherever that provably equals the per-rule
-        # chain: two or more rules, a declared write set and no filter
-        # reading it (operators/base.py Pipeline). `rule_dispatch:
+        # A processor matches its rules once (bulk or transform_once)
+        # wherever that provably equals the per-rule chain: two or
+        # more rules, a declared write set (today the labeler's) and
+        # no filter reading it (operators/base.py Pipeline). `rule_dispatch:
         # true` only extends match-once to the rest — self-reading
         # processors and undeclared write sets — i.e. the reference's
         # rule-tree semantics, where filters see the processor-entry

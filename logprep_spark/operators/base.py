@@ -166,16 +166,16 @@ class Pipeline:
     union), else the generic ``transform_once``. It is the default
     wherever it provably equals the per-rule chain, that is when
 
-    * the processor keeps ``Processor.transform`` and
-      ``Processor.condition`` (Deleter, Dropper, PreDetector and
-      TemplateReplacer run their own ``transform``);
+    * the processor keeps ``Processor.transform`` (Deleter, Dropper,
+      PreDetector and TemplateReplacer run their own);
     * it has two or more rules (one rule is already match-once: the
       chain stages its condition before the write);
-    * it declares the roots its rules write (``written_roots``) and no
-      rule filter reads a field at, above or below one of them
-      (``dispatch.reads_own_writes``).
+    * it declares the roots its rules write (``written_roots``; today
+      the labeler) and no rule filter reads a field at, above or below
+      one of them (``dispatch.reads_own_writes``).
 
-    Every other processor runs the per-rule chain. ``dispatch=True``
+    Every other processor runs the per-rule chain. The route is chosen
+    once per processor, when the pipeline is built. ``dispatch=True``
     (the config's ``rule_dispatch: true``) asks for the reference's
     rule-tree semantics everywhere: self-reading processors and those
     with an undeclared write set then match once as well, so a rule's
@@ -185,18 +185,14 @@ class Pipeline:
     def __init__(self, processors: list[Processor], dispatch: bool = False):
         self.processors = processors
         self.dispatch = dispatch
+        self._paths = [self._rule_path(proc) for proc in processors]
 
     def _rule_path(self, proc: Processor) -> Callable[[DataFrame], DataFrame]:
         """The transform ``proc`` runs in this pipeline (see the class
         docstring)."""
         from logprep_spark.operators import dispatch as dsp
 
-        cls = type(proc)
-        if (
-            len(proc.rules) < 2
-            or cls.transform is not Processor.transform
-            or cls.condition is not Processor.condition
-        ):
+        if len(proc.rules) < 2 or type(proc).transform is not Processor.transform:
             return proc.transform
         if not self.dispatch and dsp.reads_own_writes(proc) is not False:
             return proc.transform
@@ -204,8 +200,8 @@ class Pipeline:
         return bulk if bulk is not None else partial(dsp.transform_once, proc)
 
     def transform(self, df: DataFrame) -> DataFrame:
-        for proc in self.processors:
-            df = self._rule_path(proc)(df)
+        for path in self._paths:
+            df = path(df)
         return df
 
     @staticmethod

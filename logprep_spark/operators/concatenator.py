@@ -17,14 +17,6 @@ from logprep_spark.operators.base import Processor
 class Concatenator(Processor):
     rule_type = "concatenator"
 
-    def written_roots(self) -> list[str]:
-        roots = []
-        for rule in self.rules:
-            roots.append(rule.config["target_field"])
-            if rule.config.get("delete_source_fields", False):
-                roots += rule.config["source_fields"]
-        return roots
-
     def apply_rule(self, df: DataFrame, cond, cfg: dict) -> DataFrame:
         cols = [fld.get_field(df, f) for f in cfg["source_fields"]]
         present = [c.cast("string") for c in cols if c is not None]

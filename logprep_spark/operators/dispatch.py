@@ -393,14 +393,8 @@ def labeler_bulk(labeler, df: DataFrame) -> DataFrame:
     # value-bearing rules directly (one pass) instead of the old
     # size(adds) > 0 per category, which re-evaluated each category's
     # whole adds tree a second and third time under interpreted eval
-    val_idx = sorted(
-        {
-            i
-            for idx_map in cats.values()
-            for i, vals in idx_map.items()
-            if vals
-        }
-    )
+    # (an empty value list counts: the chain writes ``[]`` for it)
+    val_idx = sorted({i for idx_map in cats.values() for i in idx_map})
     # balanced OR tree (never a left-deep | chain — stack depth);
     # hoisted, the OR runs per GROUP inside a CASE branch, so a row
     # pays ~N/groups terms instead of N
@@ -487,7 +481,35 @@ def labeler_bulk(labeler, df: DataFrame) -> DataFrame:
         # non-empty string), never [], so the null-propagation forms
         # below are exactly the old truth table; the rare fallback
         # path (empty-able adds) keeps the old gated form.
-        if can_ws and flat_vals:
+        first = next(iter(idx_map))
+        first_dup = existing is None and len(set(idx_map[first])) < len(
+            idx_map[first]
+        )
+        if first_dup or any(not vals for vals in idx_map.values()):
+            # Odd value lists, written as the chain writes them: a
+            # matched empty list still writes ``[]``, and the
+            # category's first write (no input field) keeps its sorted
+            # list, repeats included, unless a later rule matched.
+            all_adds = F.coalesce(adds, empty)
+            if existing is None:
+                later = [i for i in idx_map if not (first_dup and i == first)]
+                value = F.when(
+                    _balanced_or([_cond(i) for i in later]),
+                    F.array_sort(F.array_distinct(all_adds)),
+                )
+                if first_dup:
+                    given = F.array(*[F.lit(v) for v in idx_map[first]])
+                    value = value.when(_cond(first), given)
+            else:
+                value = F.when(
+                    _balanced_or([_cond(i) for i in idx_map]),
+                    F.array_sort(
+                        F.array_distinct(
+                            F.concat(F.coalesce(existing, F.array()), all_adds)
+                        )
+                    ),
+                ).otherwise(existing)
+        elif can_ws and flat_vals:
             if existing is None:
                 # null adds -> null value (old: size-gate -> null)
                 value = F.array_sort(F.array_distinct(adds))

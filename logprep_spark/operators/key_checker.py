@@ -19,9 +19,6 @@ from logprep_spark.operators.base import Processor
 class KeyChecker(Processor):
     rule_type = "key_checker"
 
-    def written_roots(self) -> list[str]:
-        return [rule.config["target_field"] for rule in self.rules]
-
     def apply_rule(self, df: DataFrame, cond, cfg: dict) -> DataFrame:
         # the keys are config constants, so they sort here and the
         # missing ones gather in that order as one NUL-joined

@@ -226,38 +226,28 @@ class Labeler(Processor):
         compounds exponentially (measured: unrunnable at 8 rules —
         tools/rule_scale_probe.py). Bit-identical to ``transform``
         whenever no rule filter reads ``label.*`` (pytest witness in
-        tests/unit/test_rule_dispatch.py): the one-write union is
-        distinct, while the chain's first write keeps a rule's value
-        list as given, so a rule with an empty or repeated value list
-        takes the generic match-once path instead."""
-        from logprep_spark.operators.dispatch import labeler_bulk, transform_once
+        tests/unit/test_rule_dispatch.py), empty and repeated value
+        lists included."""
+        from logprep_spark.operators.dispatch import labeler_bulk
 
-        if any(
-            not values or len(set(values)) < len(values)
-            for rule in self.rules
-            for values in rule.config.get("label", {}).values()
-        ):
-            return transform_once(self, df)
         return labeler_bulk(self, df)
 
     def apply_rule(self, df: DataFrame, cond, cfg: dict) -> DataFrame:
         for category, values in cfg["label"].items():
             path = f"label.{category}"
-            new = F.array(*[F.lit(v) for v in sorted(values)])
+            # an empty list is typed like the labels, not array<void>
+            new = F.array(*[F.lit(v) for v in sorted(values)]) if values else F.array().cast("array<string>")
             existing = fld.get_field(df, path)
             if existing is None:
                 value = F.when(cond, new)
             else:
-                # sorted distinct union, a null (from the input) last:
-                # array_sort would give that, but it runs interpreted
-                # (CodegenFallback) and drops the chain out of codegen;
-                # sort_array is code-generated but sorts nulls first,
-                # so sort the distinct non-null values and let
-                # array_union append the null
-                merged = F.concat(F.coalesce(existing, F.array()), new)
-                nulls = F.array(F.lit(None).cast("string"))
+                # array_sort runs interpreted, but the code-generated
+                # sort_array puts a null (from the input) first, and
+                # moving it last reads `existing` once more: the base
+                # of a downstream filter's growth through this chain
+                # (Processor.set_when)
                 value = F.when(
-                    cond, F.array_union(F.sort_array(F.array_except(merged, nulls)), merged)
+                    cond, F.array_sort(F.array_distinct(F.concat(F.coalesce(existing, F.array()), new)))
                 ).otherwise(existing)
             df = fld.set_field(df, path, value)
         return df

@@ -22,9 +22,6 @@ ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"
 class Timestamper(Processor):
     rule_type = "timestamper"
 
-    def written_roots(self) -> list[str]:
-        return [r.config.get("target_field", "@timestamp") for r in self.rules] + ["tags"]
-
     def apply_rule(self, df: DataFrame, cond, cfg: dict) -> DataFrame:
         source = cfg["source_fields"][0]
         src = fld.get_field(df, source)

@@ -3830,15 +3830,14 @@ def dedup_exact(spark, sf_dir):
     return dd.exact_dup_groups(docs)
 
 
-def _sql_minhash_bands(source: str = "documents", materialize: bool = False) -> str:
+def _sql_minhash_bands(source: str = "documents") -> str:
     """CTE chain doc -> shingles -> 16-perm signature -> 4 LSH bands,
     mirroring functions/dedup.py minhash_bands exactly. ``source`` is
     the table/CTE the docs come from (a sampling CTE for eval
-    queries). ``materialize`` marks the multiply-referenced ``sh``,
-    ``sigs`` and ``bands`` CTEs ``AS MATERIALIZED``: DuckDB otherwise
-    inlines them at every reference, so the shingle split runs three
-    times and the signatures four."""
-    mat = "MATERIALIZED " if materialize else ""
+    queries). The multiply-referenced ``sh``, ``sigs`` and ``bands``
+    are ``AS MATERIALIZED``: DuckDB otherwise inlines them at every
+    reference, so the shingle split runs three times and the
+    signatures four."""
     sig_members = ", ".join(
         f"list_min(list_transform(hb, h -> ({dd.PERM_A[i]} * h + {dd.PERM_B[i]}) "
         f"% {dd.MERSENNE_P}))"
@@ -3854,13 +3853,13 @@ def _sql_minhash_bands(source: str = "documents", materialize: bool = False) -> 
         )
     bands_union = " UNION ALL ".join(band_selects)
     return f"""
-    sh AS {mat}(
+    sh AS MATERIALIZED (
         SELECT doc_id, {_sql_shingles()} AS shingles FROM {source}
-    ), sigs AS {mat}(
+    ), sigs AS MATERIALIZED (
         SELECT doc_id, [{sig_members}] AS sig
         FROM (SELECT doc_id, list_transform(shingles,
                   s -> {_sql_h60('s')} % {dd.MERSENNE_P}) AS hb FROM sh)
-    ), bands AS {mat}(
+    ), bands AS MATERIALIZED (
         {bands_union}
     ), pairs AS (
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -3976,7 +3975,7 @@ def dedup_minhash_estimate(spark, sf_dir):
 @register(
     "dedup_clusters",
     f"""
-    WITH RECURSIVE {_sql_minhash_bands(materialize=True)}, verified AS MATERIALIZED (
+    WITH RECURSIVE {_sql_minhash_bands()}, verified AS MATERIALIZED (
         SELECT id_a, id_b
         FROM pairs
         JOIN sh sa ON sa.doc_id = id_a
@@ -4441,7 +4440,7 @@ def ann_topk_lsh(spark, sf_dir):
 @register(
     "pairs_contrastive_mine",
     f"""
-    WITH RECURSIVE {_sql_minhash_bands(materialize=True)}, verified AS MATERIALIZED (
+    WITH RECURSIVE {_sql_minhash_bands()}, verified AS MATERIALIZED (
         SELECT id_a, id_b
         FROM pairs
         JOIN sh sa ON sa.doc_id = id_a

@@ -447,10 +447,11 @@ def _batch_processors():
 
 
 def test_pipeline_matches_once_exactly_by_default(spark):
-    """Every multi-rule processor of an events_batch-style chain takes
-    match-once by default (its filters read nothing it writes), and
-    the result equals the per-rule chain, processor by processor and
-    for the whole pipeline."""
+    """In an events_batch-style chain the labeler, whose filters read
+    nothing it writes, takes its bulk path by default; the families
+    that declare no write roots keep the per-rule chain. Every
+    multi-rule processor's result equals the per-rule chain, and so
+    does the whole pipeline's."""
     from logprep_spark.operators.base import Pipeline
 
     ev = _batch_events(spark)
@@ -459,13 +460,14 @@ def test_pipeline_matches_once_exactly_by_default(spark):
     chained = ev
     for proc in procs:
         routed = pipe._rule_path(proc)
+        if isinstance(proc, Labeler):
+            assert routed == proc.transform_bulk
+        else:
+            assert routed == proc.transform, type(proc).__name__
         if len(proc.rules) > 1:
-            assert routed != proc.transform, type(proc).__name__
             assert _collect_sorted(Pipeline([proc]).transform(ev)) == _collect_sorted(
                 proc.transform(ev)
             ), type(proc).__name__
-        else:
-            assert routed == proc.transform
         chained = proc.transform(chained)
     out = pipe.transform(ev)
     assert out.schema.simpleString() == chained.schema.simpleString()
@@ -512,11 +514,15 @@ def test_self_reading_labeler_keeps_the_chain(spark):
 def test_reads_own_writes_key_relations():
     """A filter key at, above or below a written root is a read; a
     sibling is not; an undeclared write set is unknown."""
-    from logprep_spark.operators import GenericAdder, KeyChecker, Timestamper
+    from logprep_spark.operators import GenericAdder, KeyChecker
     from logprep_spark.operators.dispatch import reads_own_writes
 
+    class DeclaredKeyChecker(KeyChecker):
+        def written_roots(self):
+            return [rule.config["target_field"] for rule in self.rules]
+
     def kc(*filters):
-        return KeyChecker([
+        return DeclaredKeyChecker([
             {"filter": f, "key_checker": {"source_fields": ["a"], "target_field": "out.missing"}}
             for f in filters
         ])
@@ -526,26 +532,33 @@ def test_reads_own_writes_key_relations():
     assert reads_own_writes(kc("*", "out.missing:x")) is True
     assert reads_own_writes(kc("*", "out")) is True
     assert reads_own_writes(kc("*", "out.missing.deep:1")) is True
-    stamp = Timestamper([
-        {"filter": "level:error", "timestamper": {"source_fields": ["when"]}},
-        {"filter": "tags:_timestamper_failure", "timestamper": {"source_fields": ["when"]}},
-    ])
-    assert reads_own_writes(stamp) is True  # tag_failure writes tags
-    adder = GenericAdder([
-        {"filter": "*", "generic_adder": {"add": {"x": "1"}}},
-        {"filter": "*", "generic_adder": {"add": {"y": "1"}}},
-    ])
-    assert reads_own_writes(adder) is None
+
+    def labeler(*filters):
+        return Labeler(rules=[
+            {"filter": f, "labeler": {"label": {"action": ["A"]}}} for f in filters
+        ])
+
+    assert reads_own_writes(labeler("event_type:click", "labels:x")) is False
+    assert reads_own_writes(labeler("event_type:click", "label.action:A")) is True
+    for undeclared in (
+        KeyChecker([
+            {"filter": "*", "key_checker": {"source_fields": ["a"], "target_field": "m"}},
+            {"filter": "*", "key_checker": {"source_fields": ["b"], "target_field": "m"}},
+        ]),
+        GenericAdder([
+            {"filter": "*", "generic_adder": {"add": {"x": "1"}}},
+            {"filter": "*", "generic_adder": {"add": {"y": "1"}}},
+        ]),
+    ):
+        assert reads_own_writes(undeclared) is None
 
 
-def test_labeler_bulk_keeps_chain_shape_for_odd_configs(spark):
-    """The chain's first write keeps a rule's value list as given and
-    adds struct fields in first-write order; the pipeline's bulk route
-    matches it for repeated, empty and out-of-order categories."""
-    from logprep_spark.operators.base import Pipeline
-
-    ev = _events(spark, 60)
-    for rules in (
+def _odd_label_rules():
+    """Rule sets whose value lists the chain writes unlike a plain
+    sorted-distinct union: repeated values in a category's first
+    write (alone and with a later writer), empty lists, and
+    categories first written out of sorted order."""
+    return [
         [
             {"filter": "event_type:click", "labeler": {"label": {"origin": ["O1"]}}},
             {"filter": "user_id:[0 TO 500]", "labeler": {"label": {"action": ["B", "A"]}}},
@@ -554,11 +567,81 @@ def test_labeler_bulk_keeps_chain_shape_for_odd_configs(spark):
             {"filter": "event_type:click", "labeler": {"label": {"action": ["X", "X"]}}},
             {"filter": "event_type:view", "labeler": {"label": {"action": []}}},
         ],
-    ):
-        seq = Labeler(rules=rules).transform(ev)
-        routed = Pipeline([Labeler(rules=rules)]).transform(ev)
-        assert routed.schema.simpleString() == seq.schema.simpleString()
-        assert _collect_sorted(routed) == _collect_sorted(seq)
+        [
+            {"filter": "event_type:click", "labeler": {"label": {"action": ["X", "X", "A"]}}},
+            {"filter": "user_id:[0 TO 400]", "labeler": {"label": {"action": ["Y"]}}},
+            {"filter": "user_id:[300 TO 600]", "labeler": {"label": {"action": []}}},
+        ],
+        [
+            {"filter": "event_type:view", "labeler": {"label": {"action": []}}},
+            {"filter": "user_id:[0 TO 500]", "labeler": {"label": {"origin": ["O2", "O2"]}}},
+        ],
+    ]
+
+
+def test_labeler_bulk_keeps_chain_shape_for_odd_configs(spark):
+    """The chain's first write keeps a rule's value list as given, a
+    matched empty list writes ``[]``, and struct fields appear in
+    first-write order; the bulk path matches all of it in one label
+    write, with and without a label struct already in the input."""
+    from logprep_spark.operators.base import Pipeline
+
+    plain = _events(spark, 60)
+    labeled = plain.withColumn(
+        "label",
+        F.when(
+            F.col("event_id") % 3 == 0,
+            F.struct(
+                F.when(F.col("event_id") % 2 == 0, F.array(F.lit("Z"), F.lit("Z"))).alias("action")
+            ),
+        ),
+    )
+    for ev in (plain, labeled):
+        for rules in _odd_label_rules():
+            proc = Labeler(rules=rules)
+            pipe = Pipeline([proc])
+            assert pipe._rule_path(proc) == proc.transform_bulk
+            routed = pipe.transform(ev)
+            seq = Labeler(rules=rules).transform(ev)
+            assert routed.schema.simpleString() == seq.schema.simpleString(), rules
+            assert _collect_sorted(routed) == _collect_sorted(seq), rules
+            def writes(df):
+                return len(re.findall(r" AS label#", df._jdf.queryExecution().analyzed().toString()))
+
+            assert writes(routed) == writes(ev) + 1
+
+
+def test_labeler_bulk_odd_rule_in_large_corpus(spark):
+    """One repeated and one empty value list keep a whole large corpus
+    on the one-write bulk path under either flag: equal to the
+    per-rule chain (checked at 60 rules, where the chain still plans
+    in seconds), and at 200 rules written once, with a downstream
+    filter on ``label`` that plans quickly."""
+    from logprep_spark.operators.base import Pipeline
+
+    def odd_rules(n):
+        rules = _label_rules(n)
+        rules[0]["labeler"]["label"]["action"] = ["L0000", "L0000"]
+        rules[7]["labeler"]["label"]["action"] = []
+        return rules
+
+    ev = _events(spark, 400)
+    seq = _collect_sorted(Labeler(rules=odd_rules(60)).transform(ev))
+    for flag in (False, True):
+        routed = Pipeline([Labeler(rules=odd_rules(60))], dispatch=flag).transform(ev)
+        assert _collect_sorted(routed) == seq
+        proc = Labeler(rules=odd_rules(200))
+        pipe = Pipeline([proc], dispatch=flag)
+        assert pipe._rule_path(proc) == proc.transform_bulk
+        routed = pipe.transform(ev)
+        analyzed = routed._jdf.queryExecution().analyzed().toString()
+        assert len(re.findall(r" AS label#", analyzed)) == 1
+        t0 = time.perf_counter()
+        filtered = routed.where(F.array_contains("label.action", "L0000"))
+        filtered._jdf.queryExecution().optimizedPlan()
+        assert time.perf_counter() - t0 < 30
+        want = sum(1 for r in routed.collect() if r["label"] and "L0000" in (r["label"]["action"] or []))
+        assert want > 0 and filtered.count() == want
 
 
 def test_labeler_union_sorts_null_last(spark):
@@ -579,8 +662,6 @@ def test_labeler_union_sorts_null_last(spark):
     assert {r["event_id"]: r["label"]["action"] for r in seq.collect()} == want
     bulk = Labeler(rules=rules).transform_bulk(ev)
     assert {r["event_id"]: r["label"]["action"] for r in bulk.collect()} == want
-    plan = seq._jdf.queryExecution().optimizedPlan().toString()
-    assert "array_sort" not in plan and "sort_array" in plan
 
 
 def test_streaming_pipeline_writes_label_once(spark, tmp_path):
