@@ -236,7 +236,10 @@ class Labeler(Processor):
         for category, values in cfg["label"].items():
             path = f"label.{category}"
             # an empty list is typed like the labels, not array<void>
-            new = F.array(*[F.lit(v) for v in sorted(values)]) if values else F.array().cast("array<string>")
+            if values:
+                new = F.array(*[F.lit(v) for v in sorted(values)])
+            else:
+                new = F.array().cast("array<string>")
             existing = fld.get_field(df, path)
             if existing is None:
                 value = F.when(cond, new)
@@ -246,8 +249,9 @@ class Labeler(Processor):
                 # moving it last reads `existing` once more: the base
                 # of a downstream filter's growth through this chain
                 # (Processor.set_when)
+                merged = F.concat(F.coalesce(existing, F.array()), new)
                 value = F.when(
-                    cond, F.array_sort(F.array_distinct(F.concat(F.coalesce(existing, F.array()), new)))
+                    cond, F.array_sort(F.array_distinct(merged))
                 ).otherwise(existing)
             df = fld.set_field(df, path, value)
         return df
